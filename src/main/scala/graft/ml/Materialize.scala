@@ -71,22 +71,6 @@ private[graft] object Materialize {
     if (rescanBytes(df) >= minBytes) cut(df) else df
   }
 
-  /** Spread a CPU-heavy projection across the cluster when its input
-    * scan CANNOT: scan task count is input bytes / split size, so a
-    * byte-small source (one sub-split file, a compact dimension) runs
-    * whatever expensive per-row work sits above it in ONE task on an
-    * otherwise idle cluster — parallelism is starved by input BYTES
-    * while the cost is per-row CPU (guide §2.6, the same
-    * byte-vs-CPU mismatch as the coalescing floor). When the frame's
-    * file-leaf bytes are under width · maxPartitionBytes (i.e. the
-    * scan could not have produced `width` splits even in the best
-    * case), repartition to the session's shuffle width before the
-    * heavy work; at production input sizes the gate measures TBs
-    * against the same product and the call is a no-op, so the extra
-    * exchange exists exactly and only in the starved regime — and
-    * what it shuffles is the PRE-projection row (callers place it
-    * below the expensive derivation, which then runs wide).
-    */
   /** Pin a loop-invariant frame in cluster storage WITH its physical
     * partitioning: persist(MEMORY_AND_DISK) + an eager count. A
     * checkpoint erases partitioning (its LogicalRDD reports
@@ -129,6 +113,22 @@ private[graft] object Materialize {
       else df)
   }
 
+  /** Spread a CPU-heavy projection across the cluster when its input
+    * scan CANNOT: scan task count is input bytes / split size, so a
+    * byte-small source (one sub-split file, a compact dimension) runs
+    * whatever expensive per-row work sits above it in ONE task on an
+    * otherwise idle cluster — parallelism is starved by input BYTES
+    * while the cost is per-row CPU (guide §2.6, the same
+    * byte-vs-CPU mismatch as the coalescing floor). When the frame's
+    * file-leaf bytes are under width · maxPartitionBytes (i.e. the
+    * scan could not have produced `width` splits even in the best
+    * case), repartition to the session's shuffle width before the
+    * heavy work; at production input sizes the gate measures TBs
+    * against the same product and the call is a no-op, so the extra
+    * exchange exists exactly and only in the starved regime — and
+    * what it shuffles is the PRE-projection row (callers place it
+    * below the expensive derivation, which then runs wide).
+    */
   def widenIfStarved(df: DataFrame): DataFrame = {
     val s = df.sparkSession
     val width = s.conf.get("spark.sql.shuffle.partitions").toInt

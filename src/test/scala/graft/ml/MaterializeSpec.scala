@@ -1,7 +1,12 @@
 package graft.ml
 
+import org.apache.spark.sql.execution.SparkPlan
+import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
+import org.apache.spark.sql.execution.exchange.ShuffleExchangeLike
+import org.apache.spark.sql.execution.joins.ShuffledHashJoinExec
 import org.apache.spark.sql.functions._
 import graft.SparkSpec
+import graft.meta.PlanIntrospection.flatten
 
 /** The r17 optimization helpers' contracts: exact-ownership
   * generation reclaim under concurrency, pinned partitioning through
@@ -55,13 +60,26 @@ class MaterializeSpec extends SparkSpec {
     val state = (0 until 50).map(i => (i, i * 2)).toDF("k", "s")
     val j = pinned.join(state.hint("shuffle_hash"), Seq("k"))
     j.collect()
-    val plan = j.queryExecution.executedPlan.toString
+    val executed = j.queryExecution.executedPlan
+    val plan = executed.toString
     // the pinned side must appear as an in-memory scan with NO
-    // exchange above it; the state side is the only exchange
-    assert(plan.contains("InMemoryTableScan"),
+    // exchange above it; the state side is the only exchange. Counted
+    // on the final plan TREE (flatten descends into AQE's final plan
+    // and each query stage, and stops at the InMemoryTableScan leaf):
+    // the printed plan also carries AQE's initial plan and the cached
+    // relation's nested build plan, whose one-time repartition is not
+    // an exchange above the pinned scan
+    def shuffles(p: SparkPlan) =
+      flatten(p).count(_.isInstanceOf[ShuffleExchangeLike])
+    val join = flatten(executed).collectFirst {
+      case sh: ShuffledHashJoinExec => sh
+    }.getOrElse(fail(s"no shuffled hash join:\n$plan"))
+    assert(flatten(join.left).exists(_.isInstanceOf[InMemoryTableScanExec]),
       s"pinned side not cached:\n$plan")
-    val exchanges = plan.split("\n").count(l =>
-      l.contains("Exchange") && !l.contains("ReusedExchange"))
+    assert(shuffles(join.left) === 0, s"pinned side re-exchanged:\n$plan")
+    assert(shuffles(join.right) === 1,
+      s"state side not the exchanged one:\n$plan")
+    val exchanges = shuffles(executed)
     assert(exchanges === 1,
       s"expected exactly the state-side exchange, got $exchanges:\n$plan")
     pinned.unpersist(blocking = true)
