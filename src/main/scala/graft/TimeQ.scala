@@ -23,7 +23,14 @@ object TimeQ {
         .queryExecution.executedPlan.execute().count()
       ()
     }
-    try runOnce("q1_agg") catch { case _: Throwable => () } // JIT warmup
+    // JIT warmup through a cheap entry; fall back to the first
+    // requested name and never swallow the failure silently (a
+    // registry rename would otherwise skip warm-up and skew run 1)
+    val warm = if (SparkEntry.queries.contains("q1_agg")) "q1_agg"
+      else names.head
+    try runOnce(warm)
+    catch { case scala.util.control.NonFatal(e) =>
+      println(s"[timeq] warmup '$warm' failed: ${e.getMessage}") }
     names.foreach { n =>
       val ts = (1 to 2).map { _ =>
         val t0 = System.nanoTime()

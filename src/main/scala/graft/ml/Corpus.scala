@@ -1140,9 +1140,21 @@ object Corpus {
       binaryPath: Option[String] = None,
       phashPath: Option[String] = None,
       substrPath: Option[String] = None) {
+    /** The named stores with their paths, in cascade order: the
+      * corpus table first, the derived indexes next, the near-dup
+      * suppression store last (see [[takedown]] for why).
+      */
+    private[graft] def stores: Seq[(ServedStore, String)] = Seq(
+      corpusPath.map(ServedStore.CorpusTable -> _),
+      bm25Path.map(ServedStore.Bm25 -> _),
+      ivfPath.map(ServedStore.Ivf -> _),
+      binaryPath.map(ServedStore.Binary -> _),
+      phashPath.map(ServedStore.Phash -> _),
+      substrPath.map(ServedStore.Substr -> _),
+      nearDupStorePath.map(ServedStore.NearDupStore -> _)).flatten
+
     /** How many stores this takedown will touch. */
-    def count: Int =
-      productIterator.count { case o: Option[_] => o.isDefined }
+    def count: Int = stores.size
   }
 
   /** Unified corpus takedown (r14 verdict item 1): ONE doc_id set
@@ -1189,19 +1201,9 @@ object Corpus {
             lit("takedown: null doc_id in delete batch")))
           .as("doc_id"))
       .distinct().localCheckpoint()
-    targets.corpusPath.foreach(p =>
-      graft.streaming.CorpusIngest.deleteFromCorpus(spark, ids, p))
-    targets.bm25Path.foreach(p => Retrieval.deleteBm25Docs(spark, ids, p))
-    targets.ivfPath.foreach(p => Similarity.deleteFromIvfIndex(spark,
-      ids.select(col("doc_id").as("vec_id")), p))
-    targets.binaryPath.foreach(p => Similarity.deleteFromBinaryIndex(
-      spark, ids.select(col("doc_id").as("vec_id")), p))
-    targets.phashPath.foreach(p => Multimodal.deleteFromPhashIndex(
-      spark, ids.select(col("doc_id").as("media_id")), p))
-    targets.substrPath.foreach(p =>
-      Dedup.deleteFromSubstrIndex(spark, ids, p))
-    targets.nearDupStorePath.foreach(p =>
-      graft.streaming.StreamingNearDup.deleteFromStore(spark, ids, p))
+    targets.stores.foreach { case (store, p) =>
+      store.delete(spark, ids.select(col("doc_id").as(store.idCol)), p)
+    }
     ledgerPath.foreach(lp => appendTakedownLedger(spark, ids, targets, lp))
     targets.count
   }
@@ -1230,14 +1232,8 @@ object Corpus {
   private def appendTakedownLedger(
       spark: org.apache.spark.sql.SparkSession, ids: DataFrame,
       targets: TakedownTargets, ledgerPath: String): Unit = {
-    val named = Seq(
-      targets.corpusPath.map("corpus" -> _),
-      targets.nearDupStorePath.map("neardup_store" -> _),
-      targets.bm25Path.map("bm25" -> _),
-      targets.ivfPath.map("ivf" -> _),
-      targets.binaryPath.map("binary" -> _),
-      targets.phashPath.map("phash" -> _),
-      targets.substrPath.map("substr" -> _)).flatten.sortBy(_._1)
+    val named = targets.stores
+      .map { case (store, p) => store.family -> p }.sortBy(_._1)
     val stores = named.map(_._1)
     val row = ids
       .agg(sort_array(collect_list(col("doc_id").cast("string")))

@@ -1290,53 +1290,8 @@ object Dedup {
     * recycled id would inherit this tombstone's mask silently.
     */
   def deleteFromSubstrIndex(spark: org.apache.spark.sql.SparkSession,
-      docIds: DataFrame, path: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4): a sweep is
-    // snapshotting/deleting tombstone files — a delete landing mid-
-    // sweep must refuse, not race the reclaim
-    graft.ml.Maintenance.refuseIfMaintaining(spark, path, "deleteFromSubstrIndex")
-    docIds.select(
-        when(col("doc_id").isNotNull, col("doc_id"))
-          .otherwise(raise_error(
-            lit("deleteFromSubstrIndex: null doc_id in delete batch")))
-          .as("doc_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$path/$SubstrDeletedDir")
-    ()
-  }
-
-  /** Mask tombstoned holders out of a (pruned) postings read. The
-    * anti-join's build side is the tombstone set — takedown-sized, so
-    * AQE broadcasts it while it stays small (no forced hint: a mask
-    * grown past broadcast size must fall back to a shuffle, not OOM
-    * the driver — the flat tiers' tombstoneUnion discipline; a mask
-    * that big is the signal to [[compactSubstrIndex]]). Takes the
-    * tombstone table as a PINNED file list (the snapshot discipline
-    * shared with the flat tiers) so a half-written concurrent delete
-    * append can't fail the read — and so one increment's several mask
-    * applications share ONE snapshot (r14 advice: two independent
-    * snapshots let a delete landing between them give the batch and
-    * index sides inconsistent views of the same takedown).
-    */
-  private def maskDeletedDocs(
-      spark: org.apache.spark.sql.SparkSession,
-      files: Seq[org.apache.hadoop.fs.Path], idx: DataFrame): DataFrame =
-    if (files.isEmpty) idx
-    else idx.join(
-      spark.read.parquet(files.map(_.toString): _*)
-        .select(col("doc_id")).distinct(),
-      Seq("doc_id"), "left_anti")
-
-  /** The entry-time tombstone FILE snapshot every mask application in
-    * one operation must share.
-    */
-  private def tombstoneSnapshot(
-      spark: org.apache.spark.sql.SparkSession,
-      path: String): Seq[org.apache.hadoop.fs.Path] = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    Similarity.tombstoneFileSnapshot(fs, path, SubstrDeletedDir)
-  }
+      docIds: DataFrame, path: String): Unit =
+    ServedStore.Substr.delete(spark, docIds, path)
 
   /** Writer-lock marker [[compactSubstrIndex]] holds while rewriting
     * bucket directories. Appends ([[appendSubstrIndexAt]], and through
@@ -1451,12 +1406,10 @@ object Dedup {
       // pin the tombstone table AS A FILE LIST at entry (the flat
       // tiers' snapshot discipline): this run drops exactly these
       // files at the end; ones appended mid-run survive and mask
-      val snapshot = Similarity.tombstoneFileSnapshot(fs, path,
-        SubstrDeletedDir)
+      val store = ServedStore.Substr
+      val snapshot = store.snapshot(fs, path)
       val dead =
-        if (snapshot.isEmpty) None
-        else Some(spark.read.parquet(snapshot.map(_.toString): _*)
-          .select(col("doc_id")).distinct())
+        if (snapshot.isEmpty) None else Some(store.idsIn(spark, snapshot))
       val multiFile = fs.listStatus(p)
         .filter(d =>
           d.isDirectory && d.getPath.getName.startsWith("bkt="))
@@ -1512,15 +1465,11 @@ object Dedup {
       // re-appended as a fresh tombstone file BEFORE the snapshot
       // files drop: a crash between the two leaves a duplicate mask
       // (idempotent), never an unmasked takedown.
-      if (snapshot.nonEmpty) {
-        val pending = spark.read.parquet(snapshot.map(_.toString): _*)
-          .select(col("doc_id")).distinct()
-          .join(spark.read.parquet(s"$path/$SubstrDocsDir")
+      dead.foreach { dd =>
+        val pending = dd.join(spark.read.parquet(s"$path/$SubstrDocsDir")
             .select(col("doc_id")), Seq("doc_id"), "left_anti")
-        if (!pending.isEmpty)
-          pending.write.mode("append")
-            .parquet(s"$path/$SubstrDeletedDir")
-        snapshot.foreach { f => fs.delete(f, false); () }
+        if (!pending.isEmpty) store.append(pending, path)
+        store.reclaim(fs, snapshot)
       }
       dirty.length.toLong
     } finally {
@@ -1565,13 +1514,13 @@ object Dedup {
     // the batch side and the index side must mask against the SAME
     // pinned file list, or a delete landing between two independent
     // snapshots gives one side an inconsistent view of the takedown
-    val tomb = tombstoneSnapshot(spark, path)
+    val tomb = ServedStore.Substr.snapshot(spark, path)
     // the BATCH side masks against the same tombstone snapshot as the
     // index side: a takedown racing its own doc's ingest (the delete
     // stream is an independent query) must neither report that doc
     // nor let same-batch spans flag against it via the within-batch
     // min — the survivor corpus contains neither (session review)
-    val live = maskDeletedDocs(spark, tomb, newDocs)
+    val live = ServedStore.Substr.maskPinned(spark, tomb, newDocs)
     // shingle+hash ONCE when the batch is big ([[Materialize
     // .cutIfBig]] — r16 verdict item 2): sh feeds the bucket collect,
     // the batch-min aggregate, and the span join, so on a large batch
@@ -1593,7 +1542,7 @@ object Dedup {
     }
     // a batch of only tombstoned/short docs probes no buckets: an
     // empty isin list must read as "nothing", never a planner error
-    val idxMin = maskDeletedDocs(spark, tomb,
+    val idxMin = ServedStore.Substr.maskPinned(spark, tomb,
         idx.filter(if (bkts.isEmpty) lit(false)
           else col("bkt").isin(bktLits: _*)))
       .groupBy(col("h")).agg(min(col("doc_id")).as("imin"))

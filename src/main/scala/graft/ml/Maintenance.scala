@@ -4,9 +4,12 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Maintenance POLICY for the standing indexes (r14 verdict item 5).
-  * Every index family exposes crash-safe manual maintenance —
+  * Every index family is a [[ServedStore]] — its tombstone sibling,
+  * id column and partition prefix, plus crash-safe manual maintenance:
   * `compact*` reclaims tombstone/duplicate debt, `foldStreamInto*`
-  * drains committed streamed batches — but nothing decided WHEN: a
+  * drains committed streamed batches. The `family` names this object
+  * takes are the stores' names ([[ServedStore.named]]; any other name
+  * is an `IllegalArgumentException`). Nothing else decided WHEN: a
   * year of streamed takedowns degrades every serve behind a mask that
   * only grows. [[compactionDebt]] measures the three debt axes
   * (tombstone ids still masking, committed un-folded stream batches,
@@ -115,44 +118,6 @@ object Maintenance {
   final case class Thresholds(maxTombstoneIds: Long = 1024L,
       maxStreamBacklog: Long = 8L, maxMultiFileBuckets: Long = 64L)
 
-  /** family → (tombstone sibling, id column, partition-dir prefix —
-    * empty for the flat tables, fold + compact actions).
-    */
-  private def familySpec(family: String): (String, String, String,
-      Option[(SparkSession, String) => Long],
-      (SparkSession, String) => Long) = family match {
-    case "bm25" => (Retrieval.DeletedDir, "doc_id", "bkt=",
-      Some(Retrieval.foldStreamIntoBm25Index),
-      Retrieval.compactBm25Index)
-    case "ivf" => (Similarity.DeletedDir, "vec_id", "cell=",
-      Some(Similarity.foldStreamIntoIvfIndex),
-      Similarity.compactIvfIndex)
-    case "binary" => (Similarity.BinDeletedDir, "vec_id", "",
-      Some(Similarity.foldStreamIntoBinaryIndex),
-      Similarity.compactBinaryIndex)
-    case "phash" => (Multimodal.PhashDeletedDir, "media_id", "",
-      Some(Multimodal.foldStreamIntoPhashIndex),
-      Multimodal.compactPhashIndex)
-    case "substr" => (Dedup.SubstrDeletedDir, "doc_id", "bkt=",
-      // SubstrIngest appends straight into the bucket dirs — the
-      // substr family has no stream sibling to fold
-      None,
-      (s: SparkSession, p: String) => Dedup.compactSubstrIndex(s, p))
-    // corpus: multi-file `ingest_batch=` dirs are the NORMAL shape
-    // (one file set per committed trigger — small-file re-binning is
-    // Layout.compactPartitions' job), so the bucket axis stays 0 and
-    // only the tombstone axis drives this family's sweep
-    case "corpus" => (graft.streaming.CorpusIngest.DeletedDir,
-      "doc_id", "", None,
-      graft.streaming.CorpusIngest.compactCorpus)
-    case "neardup_store" => (graft.streaming.StreamingNearDup.DeletedDir,
-      "doc_id", "", None,
-      graft.streaming.StreamingNearDup.compactStore)
-    case other => throw new IllegalArgumentException(
-      s"unknown index family '$other' — one of " +
-        "bm25/ivf/binary/phash/substr/corpus/neardup_store")
-  }
-
   /** Measure the index's maintenance debt. Cost shape: one file-system
     * listing of the root, the tombstone sibling, and the stream
     * sibling, plus one column-pruned distinct-count over the tombstone
@@ -162,14 +127,12 @@ object Maintenance {
     */
   def compactionDebt(spark: SparkSession, path: String,
       family: String): IndexDebt = {
-    val (deletedDir, idCol, bucketPrefix, _, _) = familySpec(family)
+    val store = ServedStore.named(family)
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val tomb = Similarity.tombstoneFileSnapshot(fs, path, deletedDir)
+    val tomb = store.snapshot(fs, path)
     val tombIds =
-      if (tomb.isEmpty) 0L
-      else spark.read.parquet(tomb.map(_.toString): _*)
-        .select(col(idCol)).distinct().count()
+      if (tomb.isEmpty) 0L else store.idsIn(spark, tomb).count()
     val sib = new org.apache.hadoop.fs.Path(
       path + Similarity.StreamSiblingSuffix)
     val backlog =
@@ -182,9 +145,10 @@ object Maintenance {
             Similarity.FoldedMarker))
       }.toLong
     val multi =
-      if (bucketPrefix.isEmpty) 0L
+      if (store.partitionPrefix.isEmpty) 0L
       else fs.listStatus(root).count { st =>
-        st.isDirectory && st.getPath.getName.startsWith(bucketPrefix) &&
+        st.isDirectory &&
+          st.getPath.getName.startsWith(store.partitionPrefix) &&
           fs.listStatus(st.getPath)
             .count(_.getPath.getName.endsWith(".parquet")) > 1
       }.toLong
@@ -235,12 +199,12 @@ object Maintenance {
       val root = new org.apache.hadoop.fs.Path(path)
       val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       withWriterLock(fs, root, "maintainIndex") {
-        val (_, _, bucketPrefix, fold, compact) = familySpec(family)
-        if (debt.streamBacklog > 0L) fold.foreach(f => f(spark, path))
-        compact(spark, path)
-        if (bucketPrefix.nonEmpty &&
+        val store = ServedStore.named(family)
+        if (debt.streamBacklog > 0L) store.fold.foreach(f => f(spark, path))
+        store.compact(spark, path)
+        if (store.partitionPrefix.nonEmpty &&
             debt.multiFileBuckets > thresholds.maxMultiFileBuckets)
-          coalesceMultiFileBuckets(spark, path, bucketPrefix)
+          coalesceMultiFileBuckets(spark, path, store.partitionPrefix)
       }
     }
     (debt, fire)

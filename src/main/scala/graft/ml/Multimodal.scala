@@ -437,18 +437,8 @@ object Multimodal {
     * .deleteFromBinaryIndex]]'s exact contract over media_id.
     */
   def deleteFromPhashIndex(spark: SparkSession, mediaIds: DataFrame,
-      path: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4)
-    Maintenance.refuseIfMaintaining(spark, path, "deleteFromPhashIndex")
-    mediaIds.select(
-        when(col("media_id").isNotNull, col("media_id"))
-          .otherwise(raise_error(
-            lit("deleteFromPhashIndex: null media_id in delete batch")))
-          .as("media_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$path/$PhashDeletedDir")
-    ()
-  }
+      path: String): Unit =
+    ServedStore.Phash.delete(spark, mediaIds, path)
 
   /** Reclaim the phash index's tombstone debt — [[Similarity
     * .compactFlatIndex]]'s staged uuid-file-swap verbatim (crash
@@ -457,8 +447,8 @@ object Multimodal {
     * data, like every compactor.
     */
   def compactPhashIndex(spark: SparkSession, path: String): Long =
-    Similarity.compactFlatIndex(spark, path, "media_id",
-      PhashDeletedDir, PhashCompactStageDir, "compactPhashIndex",
+    Similarity.compactFlatIndex(spark, path, ServedStore.Phash,
+      PhashCompactStageDir, "compactPhashIndex",
       "run foldStreamIntoPhashIndex first")
 
   /** Drain committed streamed-signature batches into the phash base —
@@ -502,10 +492,6 @@ object Multimodal {
       if (paths.size == 1 && !stagePresent && !mixedGenerations) raw
       else raw.groupBy(col("media_id"))
         .agg(max(col("ahash")).as("ahash"), max(col("dhash")).as("dhash"))
-    Similarity.tombstoneUnion(spark, Seq(basePath), PhashDeletedDir,
-        "media_id") match {
-      case Some(t) => deduped.join(t, Seq("media_id"), "left_anti")
-      case None => deduped
-    }
+    ServedStore.Phash.mask(spark, Seq(basePath), deduped)
   }
 }

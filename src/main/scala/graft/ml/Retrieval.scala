@@ -300,20 +300,8 @@ object Retrieval {
     * PodioApiGateway.py:161-178.
     */
   def deleteBm25Docs(spark: org.apache.spark.sql.SparkSession,
-      docIds: DataFrame, path: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4): a sweep is
-    // snapshotting/deleting tombstone files — a delete landing mid-
-    // sweep must refuse, not race the reclaim
-    graft.ml.Maintenance.refuseIfMaintaining(spark, path, "deleteBm25Docs")
-    docIds.select(
-        when(col("doc_id").isNotNull, col("doc_id"))
-          .otherwise(raise_error(
-            lit("deleteBm25Docs: null doc_id in delete batch")))
-          .as("doc_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$path/$DeletedDir")
-    ()
-  }
+      docIds: DataFrame, path: String): Unit =
+    ServedStore.Bm25.delete(spark, docIds, path)
 
   /** Reclaim the compaction debt [[deleteBm25Docs]] accrues:
     * physically rewrite ONLY the `bkt=` partitions holding postings
@@ -488,8 +476,7 @@ object Retrieval {
     // those files at the end — a tombstone appended concurrently by a
     // Bm25Ingest.startDeletes stream lands in a new file, survives,
     // and keeps masking (the compactIvfIndex snapshot discipline)
-    val snapshot =
-      Similarity.tombstoneFileSnapshot(fs, path, DeletedDir)
+    val snapshot = ServedStore.Bm25.snapshot(fs, path)
     if (snapshot.isEmpty) 0L
     else {
         // same stream-sibling refusal as compactIvfIndex: the
@@ -504,8 +491,7 @@ object Retrieval {
             "data — compacting the base alone would un-mask deleted " +
             "rows in streamed partitions; run foldStreamIntoBm25Index " +
             "first")
-        val dead = spark.read.parquet(snapshot.map(_.toString): _*)
-          .select(col("doc_id")).distinct()
+        val dead = ServedStore.Bm25.idsIn(spark, snapshot)
         val tf = spark.read.parquet(path)
         val dirty = tf.select(col("doc_id"), col("bkt"))
           .join(dead, Seq("doc_id"))
@@ -538,15 +524,10 @@ object Retrieval {
         swapInDocsTmp(fs, docsLive, docsBak, docsTmp)
         // tombstones go LAST (see compactIvfIndex): only the
         // snapshotted files — later-appended tombstones stay
-        snapshot.foreach { f => fs.delete(f, false); () }
+        ServedStore.Bm25.reclaim(fs, snapshot)
         dirty.length.toLong
     }
   }
-
-  /** [[Similarity.tombstoneUnion]] for the lexical tier. */
-  private def deletedDocs(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): Option[DataFrame] =
-    Similarity.tombstoneUnion(spark, paths, DeletedDir, "doc_id")
 
   /** The doc-length root serving should read: the live table, or the
     * `_bak` sibling a compaction crash in the swap window left behind.
@@ -750,11 +731,8 @@ object Retrieval {
     // a rebuild. The anti-join's build side is the tombstone set —
     // bounded by deletions since the last rebuild, so AQE broadcasts
     // it while it stays small (large tombstones = time to compact).
-    deletedDocs(spark, postingPaths) match {
-      case Some(dead) =>
-        (tf0.join(dead, Seq("doc_id"), "left_anti"),
-          dl0.join(dead, Seq("doc_id"), "left_anti"))
-      case None => (tf0, dl0)
-    }
+    val store = ServedStore.Bm25
+    store.tombstones(spark, postingPaths).fold((tf0, dl0))(dead =>
+      (store.antiJoin(tf0, dead), store.antiJoin(dl0, dead)))
   }
 }

@@ -736,20 +736,8 @@ object Similarity {
     * generation starts clean by construction.
     */
   def deleteFromBinaryIndex(spark: org.apache.spark.sql.SparkSession,
-      vecIds: DataFrame, path: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4): a sweep is
-    // snapshotting/deleting tombstone files — a delete landing mid-
-    // sweep must refuse, not race the reclaim
-    graft.ml.Maintenance.refuseIfMaintaining(spark, path, "deleteFromBinaryIndex")
-    vecIds.select(
-        when(col("vec_id").isNotNull, col("vec_id"))
-          .otherwise(raise_error(
-            lit("deleteFromBinaryIndex: null vec_id in delete batch")))
-          .as("vec_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$path/$BinDeletedDir")
-    ()
-  }
+      vecIds: DataFrame, path: String): Unit =
+    ServedStore.Binary.delete(spark, vecIds, path)
 
   /** Reclaim the binary index's tombstone debt. The table is FLAT —
     * the scan tier has no partitions to prune — so compaction is a
@@ -779,17 +767,17 @@ object Similarity {
     */
   def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    compactFlatIndex(spark, path, "vec_id", BinDeletedDir,
+    compactFlatIndex(spark, path, ServedStore.Binary,
       BinCompactStageDir, "compactBinaryIndex",
       "run foldStreamIntoBinaryIndex first")
 
   /** The flat-table compaction core — [[compactBinaryIndex]]'s staged
-    * uuid-file-swap parameterized on the id column and sibling dirs,
+    * uuid-file-swap parameterized on the store and its stage dir,
     * so the phash tier ([[Multimodal.compactPhashIndex]]) reuses the
     * exact crash protocol instead of re-implementing it.
     */
   private[ml] def compactFlatIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, idCol: String, deletedDir: String, stageDir: String,
+      path: String, store: ServedStore, stageDir: String,
       what: String, foldAdvice: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
@@ -806,13 +794,11 @@ object Similarity {
     if (fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
       applyFlatStage(fs, root, stage)
     fs.delete(stage, true)
-    val snapshot = tombstoneFileSnapshot(fs, path, deletedDir)
+    val snapshot = store.snapshot(fs, path)
     if (snapshot.isEmpty) return 0L
-    val dead = spark.read.parquet(snapshot.map(_.toString): _*)
-      .select(col(idCol)).distinct()
+    val dead = store.idsIn(spark, snapshot)
     val nDead = dead.count()
-    spark.read.parquet(path)
-      .join(dead, Seq(idCol), "left_anti")
+    store.antiJoin(spark.read.parquet(path), dead)
       .write.mode("overwrite").parquet(stage.toString)
     // the uuid marker must exist before the apply can run; written
     // before _SUCCESS? the parquet write above already planted
@@ -822,7 +808,7 @@ object Similarity {
       java.util.UUID.randomUUID().toString.replace("-", ""))
     applyFlatStage(fs, root, stage)
     fs.delete(stage, true)
-    snapshot.foreach { f => fs.delete(f, false); () }
+    store.reclaim(fs, snapshot)
     nDead
   }
 
@@ -1046,12 +1032,8 @@ object Similarity {
         .agg(wordAggs.head, wordAggs.tail: _*)
         .select(col("vec_id"),
           array(words.map(col): _*).as("bits"))
-    val tombs = tombstoneUnion(spark, Seq(basePath), BinDeletedDir,
-      "vec_id")
-    val z = tombs match {
-      case Some(t) => raw.join(t, Seq("vec_id"), "left_anti")
-      case None => raw
-    }
+    val tombs = ServedStore.Binary.tombstones(spark, Seq(basePath))
+    val z = tombs.fold(raw)(ServedStore.Binary.antiJoin(raw, _))
     // the serve consumes the alive rows TWICE (query semi-join side +
     // candidate side of the Hamming cross join). On the quiescent
     // single-root path z is the bare parquet scan — duplicating it is
@@ -1312,11 +1294,7 @@ object Similarity {
     val nw = (dim + 63) / 64
     val raw = spark.read.parquet(path)
       .select(col("vec_id"), col("bits"))
-    val z = tombstoneUnion(spark, Seq(path), BinDeletedDir,
-        "vec_id") match {
-      case Some(t) => raw.join(t, Seq("vec_id"), "left_anti")
-      case None => raw
-    }
+    val z = ServedStore.Binary.mask(spark, Seq(path), raw)
     val banded = signBanded(z, dim, nb)
     minedBandPairs(banded, bandOccupancyCap, nw, maxHamming)
   }
@@ -1387,11 +1365,7 @@ object Similarity {
     val nw = (dim + 63) / 64
     val raw = spark.read.parquet(path)
       .select(col("vec_id"), col("bits"))
-    val z = tombstoneUnion(spark, Seq(path), BinDeletedDir,
-        "vec_id") match {
-      case Some(t) => raw.join(t, Seq("vec_id"), "left_anti")
-      case None => raw
-    }
+    val z = ServedStore.Binary.mask(spark, Seq(path), raw)
     // ONE scan feeds the measurement AND both branches
     val banded = signBanded(z, dim, nb).localCheckpoint()
     val st = banded.groupBy(col("band"), col("band_bits"))
@@ -1925,53 +1899,6 @@ object Similarity {
         hasParquetData(fs, st.getPath)
     }
 
-  /** The parquet data files currently composing the tombstone table
-    * under `path/dirName` — the SNAPSHOT a compactor must pin at
-    * entry. A compactor that deletes exactly these files afterwards
-    * (never the whole directory) closes the race with a concurrent
-    * streamed delete ([[graft.streaming.VectorIngest.startDeletes]] /
-    * Bm25Ingest equivalent): a tombstone file appended between the
-    * snapshot and the final cleanup is left untouched, keeps masking
-    * at serving, and is reclaimed by the next compaction instead of
-    * being silently discarded (which would resurrect the deleted id).
-    */
-  private[graft] def tombstoneFileSnapshot(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      dirName: String): Seq[org.apache.hadoop.fs.Path] = {
-    val dir = new org.apache.hadoop.fs.Path(s"$path/$dirName")
-    if (!fs.exists(dir)) Seq.empty
-    else fs.listStatus(dir).toSeq.map(_.getPath)
-      .filter(_.getName.endsWith(".parquet"))
-  }
-
-  /** The union of tombstone tables under `paths` — one helper for
-    * both index tiers (the IVF/PQ `_graft_deleted` and BM25's
-    * `_graft_bm25_deleted` differ only in dir name and id column), so
-    * a fix to the read path (schema validation, a corrupt-file guard)
-    * can never land in one tier and not the other. Roots without a
-    * tombstone table contribute nothing; distinct so repeated or
-    * overlapping delete batches collapse to one mask row per id.
-    * Reads the explicit per-root parquet FILE list, not the
-    * directory: after a file-snapshot compaction the directory may
-    * legitimately survive holding only a stray `_SUCCESS` (or only
-    * tombstones appended mid-compaction), and a directory read would
-    * fail schema inference on the former.
-    */
-  private[graft] def tombstoneUnion(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String], dirName: String, idCol: String)
-      : Option[DataFrame] = {
-    val hc = spark.sparkContext.hadoopConfiguration
-    val fileSets = paths.map { p =>
-      val dir = new org.apache.hadoop.fs.Path(s"$p/$dirName")
-      tombstoneFileSnapshot(dir.getFileSystem(hc), p, dirName)
-    }.filter(_.nonEmpty)
-    if (fileSets.isEmpty) None
-    else Some(fileSets
-      .map(fl => spark.read.parquet(fl.map(_.toString): _*))
-      .reduce(_.unionByName(_))
-      .select(col(idCol)).distinct())
-  }
-
   /** Soft-delete vectors from a persisted IVF or IVF-PQ index: the
     * ids land in an underscore-prefixed tombstone table beside the
     * data (invisible to the cell scan — the [[writeIvfIndex]] sibling-
@@ -1996,26 +1923,8 @@ object Similarity {
     * rebuild, stated here rather than discovered.
     */
   def deleteFromIvfIndex(spark: org.apache.spark.sql.SparkSession,
-      vecIds: DataFrame, path: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4): a sweep is
-    // snapshotting/deleting tombstone files — a delete landing mid-
-    // sweep must refuse, not race the reclaim
-    graft.ml.Maintenance.refuseIfMaintaining(spark, path, "deleteFromIvfIndex")
-    vecIds.select(
-        when(col("vec_id").isNotNull, col("vec_id"))
-          .otherwise(raise_error(
-            lit("deleteFromIvfIndex: null vec_id in delete batch")))
-          .as("vec_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$path/$DeletedDir")
-    ()
-  }
-
-  /** [[tombstoneUnion]] for the vector tier (streamed append siblings
-    * never carry their own tombstone table). */
-  private def tombstones(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String]): Option[DataFrame] =
-    tombstoneUnion(spark, paths, DeletedDir, "vec_id")
+      vecIds: DataFrame, path: String): Unit =
+    ServedStore.Ivf.delete(spark, vecIds, path)
 
   /** Reclaim the compaction debt [[deleteFromIvfIndex]] accrues:
     * physically rewrite ONLY the `cell=` partitions that contain
@@ -2273,7 +2182,7 @@ object Similarity {
     // by a startDeletes stream lands in a NEW file, survives the
     // cleanup, and keeps masking until the next compaction (deleting
     // the whole directory here would silently discard it — r9 advice)
-    val snapshot = tombstoneFileSnapshot(fs, path, DeletedDir)
+    val snapshot = ServedStore.Ivf.snapshot(fs, path)
     if (snapshot.isEmpty) 0L
     else {
         // a streamed-appends sibling HOLDING DATA serves through the
@@ -2289,8 +2198,7 @@ object Similarity {
             s"$path$StreamSiblingSuffix holds un-folded data — " +
             "compacting the base alone would un-mask deleted rows in " +
             "streamed partitions; run foldStreamIntoIvfIndex first")
-        val dead = spark.read.parquet(snapshot.map(_.toString): _*)
-          .select(col("vec_id")).distinct()
+        val dead = ServedStore.Ivf.idsIn(spark, snapshot)
         val idx = spark.read.parquet(path)
         // bounded driver action: the distinct dirty-cell ids (≤ nCells)
         val dirty = idx.select(col("vec_id"), col("cell"))
@@ -2317,25 +2225,10 @@ object Similarity {
         // place, so the mask keeps serving correct and a re-run (which
         // replays any committed stage first) converges. Delete ONLY
         // the snapshotted files — later-appended tombstones stay.
-        snapshot.foreach { f => fs.delete(f, false); () }
+        ServedStore.Ivf.reclaim(fs, snapshot)
         dirty.length.toLong
     }
   }
-
-  /** Mask tombstoned ids out of a pruned index read. The anti-join's
-    * build side is the tombstone set — bounded by deletions since the
-    * last rebuild, so AQE broadcasts it while it stays small; a
-    * tombstone table grown large enough to shuffle is the signal to
-    * [[compactIvfIndex]].
-    */
-  private def maskDeleted(spark: org.apache.spark.sql.SparkSession,
-      paths: Seq[String], index: DataFrame, idCol: String): DataFrame =
-    tombstones(spark, paths) match {
-      case Some(t) =>
-        index.join(t.withColumnRenamed("vec_id", idCol), Seq(idCol),
-          "left_anti")
-      case None => index
-    }
 
   /** Query a persisted index: rank each query's `probes` nearest
     * cells, then scan ONLY those `cell=` directories (the probed cell
@@ -2729,7 +2622,7 @@ object Similarity {
       .localCheckpoint()
     val cells = qr.select(col("cell")).distinct()
       .collect().map(_.getLong(0))
-    val pruned = maskDeleted(spark, paths, paths.map { p =>
+    val pruned = ServedStore.Ivf.mask(spark, paths, paths.map { p =>
       spark.read.parquet(p)
         .filter(col("cell").isin(cells.map(x => x: Any): _*))
         .select(col("vec_id").as("j"), col("codes"), col("rnrm"),
@@ -2821,9 +2714,8 @@ object Similarity {
     val nq = withNorm(queries).localCheckpoint()
     val ranked = assignRanked(nq, cents, probes).localCheckpoint()
     val qc = ranked.groupBy(col("cell")).agg(count(lit(1)).as("qn"))
-    val ic = maskDeleted(spark, Seq(path),
-        spark.read.parquet(path).select(col("vec_id"), col("cell")),
-        "vec_id")
+    val ic = ServedStore.Ivf.mask(spark, Seq(path),
+        spark.read.parquet(path).select(col("vec_id"), col("cell")))
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("cn"))
     val st = qc.join(ic, Seq("cell"), "left")
@@ -3060,7 +2952,7 @@ object Similarity {
         .localCheckpoint())
     val cells = qr.select(col("cell")).distinct()
       .collect().map(_.getLong(0))
-    val pruned = maskDeleted(spark, paths, paths.map { p =>
+    val pruned = ServedStore.Ivf.mask(spark, paths, paths.map { p =>
       spark.read.parquet(p)
         .filter(col("cell").isin(cells.map(x => x: Any): _*))
         // directory-name type inference reads `cell=5` back as int —
@@ -3137,9 +3029,8 @@ object Similarity {
         col("nrm").as("na"), col("cell"))
       .localCheckpoint()
     val qc = qr.groupBy(col("cell")).agg(count(lit(1)).as("qn"))
-    val ic = maskDeleted(spark, Seq(path),
-        spark.read.parquet(path).select(col("vec_id"), col("cell")),
-        "vec_id")
+    val ic = ServedStore.Ivf.mask(spark, Seq(path),
+        spark.read.parquet(path).select(col("vec_id"), col("cell")))
       .groupBy(col("cell").cast("long").as("cell"))
       .agg(count(lit(1)).as("cn"))
     val st = qc.join(ic, Seq("cell"), "left")

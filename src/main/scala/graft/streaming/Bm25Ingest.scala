@@ -113,13 +113,7 @@ object Bm25Ingest {
     */
   def startDeletes(streamingIds: DataFrame, indexPath: String,
       checkpoint: String): StreamingQuery =
-    streamingIds.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Retrieval.deleteBm25Docs(batch.sparkSession,
-          batch.select(col("doc_id")), indexPath)
-      }
-      .start()
+    graft.ml.ServedStore.Bm25.startDeletes(streamingIds, indexPath, checkpoint)
 
   /** Serve top-k from base ∪ committed streamed appends (term-bucket
     * pruned on every root); falls back to the base alone before any

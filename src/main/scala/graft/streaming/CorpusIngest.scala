@@ -71,19 +71,8 @@ object CorpusIngest {
     * stay physically present (masked) until an offline rewrite.
     */
   def deleteFromCorpus(spark: org.apache.spark.sql.SparkSession,
-      docIds: DataFrame, corpusPath: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4)
-    graft.ml.Maintenance.refuseIfMaintaining(spark, corpusPath,
-      "deleteFromCorpus")
-    docIds.select(
-        when(col("doc_id").isNotNull, col("doc_id"))
-          .otherwise(raise_error(
-            lit("deleteFromCorpus: null doc_id in delete batch")))
-          .as("doc_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$corpusPath/$DeletedDir")
-    ()
-  }
+      docIds: DataFrame, corpusPath: String): Unit =
+    graft.ml.ServedStore.CorpusTable.delete(spark, docIds, corpusPath)
 
   private[graft] val CorpusCompactStageDir = "_graft_corpus_compact_stage"
 
@@ -129,11 +118,10 @@ object CorpusIngest {
     if (graft.sources.Markers.read(fs, sid).isDefined)
       applyCorpusStage(fs, root, stage)
     fs.delete(stage, true)
-    val snapshot = graft.ml.Similarity.tombstoneFileSnapshot(fs,
-      corpusPath, DeletedDir)
+    val store = graft.ml.ServedStore.CorpusTable
+    val snapshot = store.snapshot(fs, corpusPath)
     if (snapshot.isEmpty) return 0L
-    val dead = spark.read.parquet(snapshot.map(_.toString): _*)
-      .select(col("doc_id")).distinct().localCheckpoint()
+    val dead = store.idsIn(spark, snapshot).localCheckpoint()
     val committed = committedPartitions(fs, root)
     val raw =
       if (committed.isEmpty) None
@@ -147,8 +135,7 @@ object CorpusIngest {
         dead.join(r.select(col("doc_id")), Seq("doc_id"), "left_anti")
           .localCheckpoint()
     }
-    if (!pending.isEmpty)
-      pending.write.mode("append").parquet(s"$corpusPath/$DeletedDir")
+    if (!pending.isEmpty) store.append(pending, corpusPath)
     // bounded driver action: the dirty-partition id list (takedowns
     // touch the partitions their docs landed in, not the whole table)
     val dirty: Seq[Long] = raw match {
@@ -215,12 +202,7 @@ object CorpusIngest {
             && !p.getName.startsWith(prefix))
           .foreach { p => fs.delete(p, false); () }
     }
-    graft.sources.Markers.read(fs, new org.apache.hadoop.fs.Path(stage,
-        StreamingNearDup.TombfilesMarker))
-      .foreach(_.split("\n").filter(_.nonEmpty).foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(f), false)
-        ()
-      })
+    StreamingNearDup.deleteManifested(fs, stage)
     fs.delete(stage, true)
     ()
   }
@@ -258,10 +240,7 @@ object CorpusIngest {
         "wrong)")
     val rows = spark.read.option("basePath", corpusPath)
       .parquet(committed: _*)
-    graft.ml.Similarity.tombstoneUnion(spark, Seq(corpusPath),
-        DeletedDir, "doc_id")
-      .map(t => rows.join(t, Seq("doc_id"), "left_anti"))
-      .getOrElse(rows)
+    graft.ml.ServedStore.CorpusTable.mask(spark, Seq(corpusPath), rows)
   }
 
   /** `maintainEvery` (0 = off) wires the every-N-batches

@@ -102,13 +102,7 @@ object MediaIngest {
     */
   def startDeletes(streamingIds: DataFrame, indexPath: String,
       checkpoint: String): StreamingQuery =
-    streamingIds.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Multimodal.deleteFromPhashIndex(batch.sparkSession,
-          batch.select(col("media_id")), indexPath)
-      }
-      .start()
+    graft.ml.ServedStore.Phash.startDeletes(streamingIds, indexPath, checkpoint)
 
   /** The stored signatures a near-dup question may read: base ∪
     * COMMITTED streamed partitions ([[VectorIngest.servePaths]]'s

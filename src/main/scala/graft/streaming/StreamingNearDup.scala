@@ -72,19 +72,8 @@ object StreamingNearDup {
     * content the corpus no longer holds.
     */
   def deleteFromStore(spark: SparkSession, docIds: DataFrame,
-      storePath: String): Unit = {
-    // maintenance writer lock (r15 verdict item 4)
-    graft.ml.Maintenance.refuseIfMaintaining(spark, storePath,
-      "deleteFromStore")
-    docIds.select(
-        when(col("doc_id").isNotNull, col("doc_id"))
-          .otherwise(raise_error(
-            lit("deleteFromStore: null doc_id in delete batch")))
-          .as("doc_id"))
-      .distinct()
-      .write.mode("append").parquet(s"$storePath/$DeletedDir")
-    ()
-  }
+      storePath: String): Unit =
+    graft.ml.ServedStore.NearDupStore.delete(spark, docIds, storePath)
 
   /** Read the signature store (doc_id, simhash, batch_id, batch_sig),
     * [[deleteFromStore]] tombstones masked; an absent path (first run)
@@ -100,10 +89,7 @@ object StreamingNearDup {
     val rows = rawStore(spark, storePath)
     // takedown mask: AQE-broadcast anti-join while the tombstone set
     // stays takedown-sized (no forced hint — the shared discipline)
-    graft.ml.Similarity.tombstoneUnion(spark, Seq(storePath),
-        DeletedDir, "doc_id")
-      .map(t => rows.join(t, Seq("doc_id"), "left_anti"))
-      .getOrElse(rows)
+    graft.ml.ServedStore.NearDupStore.mask(spark, Seq(storePath), rows)
   }
 
   /** The store's normalized rows WITHOUT the takedown mask — the
@@ -240,19 +226,17 @@ object StreamingNearDup {
       deleteManifested(fs, stage)
     }
     fs.delete(stage, true)
-    val snapshot = graft.ml.Similarity.tombstoneFileSnapshot(fs,
-      storePath, DeletedDir)
+    val store = graft.ml.ServedStore.NearDupStore
+    val snapshot = store.snapshot(fs, storePath)
     if (snapshot.isEmpty) return 0L
-    val dead = spark.read.parquet(snapshot.map(_.toString): _*)
-      .select(col("doc_id")).distinct().localCheckpoint()
+    val dead = store.idsIn(spark, snapshot).localCheckpoint()
     val nDead = dead.count()
     // settled/pending split against the PRE-apply raw rows (the mask
     // hides exactly the rows this question is about)
     val pending = dead.join(rawStore(spark, storePath)
         .select(col("doc_id")), Seq("doc_id"), "left_anti")
       .localCheckpoint()
-    if (!pending.isEmpty)
-      pending.write.mode("append").parquet(s"$storePath/$DeletedDir")
+    if (!pending.isEmpty) store.append(pending, storePath)
     // survivors (fully masked — a tombstone appended after the
     // snapshot masks rows out of the stage AND keeps its file) stage
     // durably; the uuid marker is the commit point
@@ -269,15 +253,17 @@ object StreamingNearDup {
     nDead
   }
 
-  /** Drop exactly the tombstone files a committed stage manifested. */
-  private def deleteManifested(fs: org.apache.hadoop.fs.FileSystem,
+  /** Drop exactly the tombstone files a committed stage manifested —
+    * this store's and the corpus table's compaction stages alike.
+    */
+  private[streaming] def deleteManifested(
+      fs: org.apache.hadoop.fs.FileSystem,
       stage: org.apache.hadoop.fs.Path): Unit =
     graft.sources.Markers.read(fs,
         new org.apache.hadoop.fs.Path(stage, TombfilesMarker))
-      .foreach(_.split("\n").filter(_.nonEmpty).foreach { f =>
-        fs.delete(new org.apache.hadoop.fs.Path(f), false)
-        ()
-      })
+      .foreach(m => graft.ml.ServedStore.NearDupStore.reclaim(fs,
+        m.split("\n").toSeq.filter(_.nonEmpty)
+          .map(new org.apache.hadoop.fs.Path(_))))
 
   /** [[processBatch]] variant whose callback also receives the batch's
     * content fingerprint — so callers that need the sig themselves

@@ -137,13 +137,7 @@ object SubstrIngest {
     */
   def startDeletes(streamingIds: DataFrame, indexPath: String,
       checkpoint: String): StreamingQuery =
-    streamingIds.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Dedup.deleteFromSubstrIndex(batch.sparkSession,
-          batch.select(col("doc_id")), indexPath)
-      }
-      .start()
+    graft.ml.ServedStore.Substr.startDeletes(streamingIds, indexPath, checkpoint)
 
   /** Wire the ONLINE-DEDUP loop: every micro-batch is span-reported
     * against the standing corpus, then indexed — the live form of

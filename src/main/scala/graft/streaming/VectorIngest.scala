@@ -194,14 +194,7 @@ object VectorIngest {
     */
   def startDeletes(streamingIds: DataFrame, indexPath: String,
       checkpoint: String): StreamingQuery =
-    streamingIds.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, _: Long) =>
-        Similarity.deleteFromIvfIndex(batch.sparkSession,
-          batch.select(org.apache.spark.sql.functions.col("vec_id")),
-          indexPath)
-      }
-      .start()
+    graft.ml.ServedStore.Ivf.startDeletes(streamingIds, indexPath, checkpoint)
 
   /** Serve top-k from base ∪ streamed appends (partition-pruned on
     * both); falls back to the base alone before any batch commits.

@@ -2605,6 +2605,17 @@ class MlSpec extends SparkSpec {
     }
   }
 
+  test("pcaTopComponent on an empty embedding set fails with the " +
+      "empty-set message, not a coordinate-count mismatch") {
+    import spark.implicits._
+    val empty = Seq.empty[(Long, Seq[Float])].toDF("vec_id", "embedding")
+    val e = intercept[IllegalArgumentException] {
+      Similarity.pcaTopComponent(empty, 4, iters = 1).collect()
+    }
+    assert(e.getMessage.contains("cannot fit PCA on an empty embedding set"),
+      e.getMessage)
+  }
+
   test("outliersByLabel flags the planted off-cluster vector, z-scores " +
       "a zero-variance label to 0, and excludes degenerate vectors") {
     import spark.implicits._
