@@ -1243,24 +1243,15 @@ object Dedup {
     // maintainIndex side (r15 verdict item 4)
     graft.ml.Maintenance.refuseIfMaintaining(spark, path,
       "appendSubstrIndex")
-    // writer lock: a compaction is dynamically overwriting the same
-    // bkt= directories this append targets — racing it would drop
-    // this append's rows silently, so refuse loudly instead (see
-    // SubstrCompactingMarker for the crashed-compaction story)
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/$SubstrCompactingMarker")
-    val mfs = marker.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!mfs.exists(marker),
-      s"appendSubstrIndex: compaction in progress on $path " +
-        s"($SubstrCompactingMarker present) — retry after it " +
-        "completes; a crashed compaction's marker is cleared by the " +
-        "next compactSubstrIndex entry")
     // a COMMITTED but un-applied compaction stage is as dangerous as
     // a live compaction: the next compactSubstrIndex entry REPLAYS
     // the stage over its dirty buckets, silently overwriting any rows
-    // appended now (the marker alone cannot cover this — a failed
-    // compaction clears it on the way out, stage intact)
-    Similarity.requireNoCommittedStage(mfs, path, "appendSubstrIndex")
+    // appended now (the lock alone cannot cover this — a failed
+    // compaction releases it on the way out, stage intact)
+    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
+      new org.apache.hadoop.fs.Path(path).getFileSystem(
+        spark.sparkContext.hadoopConfiguration),
+      path, "appendSubstrIndex")
     val (k, nBuckets) = substrIndexParams(spark, path)
     requireMonotoneBatch(newDocs, maxIndexed, "appendSubstrIndex")
     posShingleHashes(newDocs, k)
@@ -1293,22 +1284,6 @@ object Dedup {
       docIds: DataFrame, path: String): Unit =
     ServedStore.Substr.delete(spark, docIds, path)
 
-  /** Writer-lock marker [[compactSubstrIndex]] holds while rewriting
-    * bucket directories. Appends ([[appendSubstrIndexAt]], and through
-    * it the [[graft.streaming.SubstrIngest]] stream) REFUSE loudly
-    * while it exists, because an append landing in a `bkt=` directory
-    * the compactor is dynamically overwriting would be silently
-    * dropped. A marker left by a CRASHED compaction keeps appends
-    * blocked (loudly, with this name in the message) until the next
-    * [[compactSubstrIndex]] entry replays the stage and clears it —
-    * fail-closed, never silent loss. The residual window (append
-    * checks the marker, compactor creates it before the append's
-    * write commits) is the honest limit of directory-of-parquet
-    * tables without a coordination service; it shrinks the exposure
-    * from the whole compaction to one check-to-commit gap.
-    */
-  private[graft] val SubstrCompactingMarker = "_graft_compacting"
-
   /** Compact the substr index: collapse the duplicate (h, doc_id)
     * postings that at-least-once replays accumulate, and reclaim the
     * tombstone debt [[deleteFromSubstrIndex]] appends — physically
@@ -1330,152 +1305,105 @@ object Dedup {
     * via the tombstones (the registry gate proves it) — compaction
     * reclaims file count, probe bytes, and mask size. Crash-safe via
     * the shared durable-stage protocol
-    * ([[Similarity.applyCompactionStage]]): survivors land in a
-    * staged table committed BEFORE any index partition is touched, a
+    * ([[graft.sources.StagedRewrite.rewriteBuckets]]): survivors land
+    * in a staged table committed BEFORE any index partition is
+    * touched, a
     * crashed apply replays from the stage on the next entry, and the
     * snapshotted tombstone FILES are deleted LAST — every earlier
     * crash point leaves them masking, and a delete appended mid-run
     * lands in a new file that survives the cleanup. Concurrent
-    * appends refuse loudly while the [[SubstrCompactingMarker]]
-    * writer lock is held.
+    * appends refuse loudly while the [[Maintenance.MaintainingMarker]]
+    * writer lock is held ([[Maintenance.withWriterLock]]; a crashed
+    * run's stale marker is cleared by re-running with
+    * `breakStaleLock = true`).
     *
     * Returns the number of buckets rewritten.
     */
   def compactSubstrIndex(spark: org.apache.spark.sql.SparkSession,
       path: String, breakStaleLock: Boolean = false): Long = {
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (breakStaleLock) Maintenance.clearWriterLock(fs, root)
+    // take the writer lock FIRST: everything below (stage replay
+    // included) rewrites bucket directories appends also target
+    Maintenance.withWriterLock(fs, root, "compactSubstrIndex") {
+      compactSubstrIndexLocked(spark, path)
+    }
+  }
+
+  /** [[compactSubstrIndex]]'s body, for a caller that already holds
+    * the writer lock ([[Maintenance.maintainIndex]]).
+    */
+  private[graft] def compactSubstrIndexLocked(
+      spark: org.apache.spark.sql.SparkSession, path: String): Long = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagePath = s"$path/${Similarity.CompactStageDir}"
-    val marker = new org.apache.hadoop.fs.Path(
-      s"$path/$SubstrCompactingMarker")
-    // take the writer lock FIRST: everything below (stage replay
-    // included) rewrites bucket directories appends also target.
-    // overwrite = FALSE makes the lock exclusive against a concurrent
-    // compactor (two overwriting creators would both "acquire" it and
-    // the first one's finally-release would unlock the second's
-    // critical section — the r10 advice finding). A marker left by a
-    // CRASHED run (the finally below never ran) is stale, not held:
-    // delete it and re-enter — single-writer maintenance remains the
-    // caller's discipline across crashes, but compactor-vs-compactor
-    // exclusion within a live process is now self-enforcing.
-    if (breakStaleLock) { fs.delete(marker, false); () }
-    // only the already-exists failure means "lock held" — a
-    // transient IO/permission failure must propagate as itself, or
-    // it would steer the operator toward breakStaleLock=true and
-    // delete a marker that was never stale (the r11 advice finding).
-    // RawLocalFileSystem signals the non-overwriting create collision
-    // as FileAlreadyExistsException; be liberal and accept any
-    // "already exists" IOException subtype, nothing else.
-    // some object-store connectors signal the create(overwrite=false)
-    // collision as a generic IOException whose message says "already
-    // exists" — keep the lock-held guidance there too (r12 advice),
-    // but ONLY when the message names THIS marker: an unanchored
-    // substring match would re-create the r11 bug class (a transient
-    // failure about some other path steered toward breakStaleLock).
-    // Any other IOException still propagates as itself.
-    def lockHeld(e: java.io.IOException): Boolean = e match {
-      case _: org.apache.hadoop.fs.FileAlreadyExistsException => true
-      case _ =>
-        Option(e.getMessage).exists(m =>
-          m.toLowerCase.contains("already exists") &&
-            (m.contains(marker.toString) || m.contains(marker.getName)))
+    // finish a crashed apply from its committed stage first; an
+    // uncommitted stage is discardable staging debris
+    graft.sources.StagedRewrite.replayBuckets(spark, path, "bkt")
+    // pin the tombstone table AS A FILE LIST at entry (the flat
+    // tiers' snapshot discipline): this run drops exactly these
+    // files at the end; ones appended mid-run survive and mask
+    val store = ServedStore.Substr
+    val snapshot = store.snapshot(fs, path)
+    val dead =
+      if (snapshot.isEmpty) None else Some(store.idsIn(spark, snapshot))
+    val multiFile = fs.listStatus(p)
+      .filter(d =>
+        d.isDirectory && d.getPath.getName.startsWith("bkt="))
+      .filter(d => fs.listStatus(d.getPath)
+        .count(f => f.getPath.getName.endsWith(".parquet")) > 1)
+      .map(_.getPath.getName.stripPrefix("bkt=").toLong)
+    val idx = spark.read.parquet(path)
+    // bounded driver actions: ≤ n_buckets ids survive each filter
+    val dupDirty: Seq[Long] =
+      if (multiFile.isEmpty) Seq.empty
+      else idx.filter(
+          Similarity.partitionLits(idx, "bkt", multiFile.toSeq))
+        .groupBy(col("bkt"))
+        .agg(count(lit(1)).as("n"),
+          count_distinct(col("h"), col("doc_id")).as("d"))
+        .filter(col("n") > col("d"))
+        .select(col("bkt").cast("long"))
+        .collect().toSeq.map(_.getLong(0))
+    val deadDirty: Seq[Long] = dead match {
+      case None => Seq.empty
+      case Some(dd) => idx.select(col("doc_id"), col("bkt"))
+        .join(dd, Seq("doc_id"))
+        .select(col("bkt").cast("long")).distinct()
+        .collect().toSeq.map(_.getLong(0))
     }
-    try fs.create(marker, false).close()
-    catch {
-      case e: java.nio.file.FileAlreadyExistsException =>
-        throw new IllegalStateException(
-          s"compactSubstrIndex: writer lock $marker is already held " +
-            "— another compactor is live (wait for it), or a crashed " +
-            "run left a stale marker (re-run with breakStaleLock = " +
-            "true once no compactor is live; the stage-replay logic " +
-            "then finishes any crashed apply first)", e)
-      case e: java.io.IOException if lockHeld(e) =>
-        throw new IllegalStateException(
-          s"compactSubstrIndex: writer lock $marker is already held " +
-            "— another compactor is live (wait for it), or a crashed " +
-            "run left a stale marker (re-run with breakStaleLock = " +
-            "true once no compactor is live; the stage-replay logic " +
-            "then finishes any crashed apply first)", e)
-    }
-    try {
-      // finish a crashed apply from its committed stage first; an
-      // uncommitted stage is discardable staging debris
-      if (Similarity.compactionStageCommitted(fs, path))
-        Similarity.applyCompactionStage(spark, path, "bkt")
-      fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-      // pin the tombstone table AS A FILE LIST at entry (the flat
-      // tiers' snapshot discipline): this run drops exactly these
-      // files at the end; ones appended mid-run survive and mask
-      val store = ServedStore.Substr
-      val snapshot = store.snapshot(fs, path)
-      val dead =
-        if (snapshot.isEmpty) None else Some(store.idsIn(spark, snapshot))
-      val multiFile = fs.listStatus(p)
-        .filter(d =>
-          d.isDirectory && d.getPath.getName.startsWith("bkt="))
-        .filter(d => fs.listStatus(d.getPath)
-          .count(f => f.getPath.getName.endsWith(".parquet")) > 1)
-        .map(_.getPath.getName.stripPrefix("bkt=").toLong)
-      val idx = spark.read.parquet(path)
-      // bounded driver actions: ≤ n_buckets ids survive each filter
-      val dupDirty: Seq[Long] =
-        if (multiFile.isEmpty) Seq.empty
-        else idx.filter(
-            Similarity.partitionLits(idx, "bkt", multiFile.toSeq))
-          .groupBy(col("bkt"))
-          .agg(count(lit(1)).as("n"),
-            count_distinct(col("h"), col("doc_id")).as("d"))
-          .filter(col("n") > col("d"))
-          .select(col("bkt").cast("long"))
-          .collect().toSeq.map(_.getLong(0))
-      val deadDirty: Seq[Long] = dead match {
-        case None => Seq.empty
-        case Some(dd) => idx.select(col("doc_id"), col("bkt"))
-          .join(dd, Seq("doc_id"))
-          .select(col("bkt").cast("long")).distinct()
-          .collect().toSeq.map(_.getLong(0))
-      }
-      val dirty = (dupDirty ++ deadDirty).distinct
-      if (dirty.nonEmpty) {
-        val pruned = idx.filter(
-          Similarity.partitionLits(idx, "bkt", dirty))
-        dead.map(dd => pruned.join(dd, Seq("doc_id"),
-            "left_anti"))
+    val dirty = (dupDirty ++ deadDirty).distinct
+    if (dirty.nonEmpty) {
+      val pruned = idx.filter(
+        Similarity.partitionLits(idx, "bkt", dirty))
+      graft.sources.StagedRewrite.rewriteBuckets(spark, path, "bkt",
+        dead.map(dd => pruned.join(dd, Seq("doc_id"), "left_anti"))
           .getOrElse(pruned)
-          .select(col("h"), col("doc_id"), col("bkt")).distinct()
-          .write.mode("overwrite").parquet(stagePath)
-        import spark.implicits._
-        dirty.toDF("part").coalesce(1).write.mode("overwrite")
-          .parquet(s"$stagePath/_parts")
-        Similarity.applyCompactionStage(spark, path, "bkt")
-        fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-        ()
-      }
-      // tombstones go LAST: every earlier crash point leaves them in
-      // place (masking rows the crash may have left behind), and a
-      // crash between the apply above and this delete re-enters as
-      // a no-op mask over already-removed rows. Only the snapshot —
-      // and of it, only the SETTLED ids (r14 advice, high): a
-      // tombstone whose doc_id is not in the docs sibling is a
-      // PRE-INGEST takedown (the delete stream's contract lets dead
-      // ids arrive before their docs) with nothing to reclaim — it
-      // must KEEP masking until its doc is actually ingested, or
-      // delete → compact → ingest of the same id would silently lose
-      // the takedown and make the id recyclable. Pending ids are
-      // re-appended as a fresh tombstone file BEFORE the snapshot
-      // files drop: a crash between the two leaves a duplicate mask
-      // (idempotent), never an unmasked takedown.
-      dead.foreach { dd =>
-        val pending = dd.join(spark.read.parquet(s"$path/$SubstrDocsDir")
-            .select(col("doc_id")), Seq("doc_id"), "left_anti")
-        if (!pending.isEmpty) store.append(pending, path)
-        store.reclaim(fs, snapshot)
-      }
-      dirty.length.toLong
-    } finally {
-      fs.delete(marker, false)
-      ()
+          .select(col("h"), col("doc_id"), col("bkt")).distinct(),
+        dirty)
     }
+    // tombstones go LAST: every earlier crash point leaves them in
+    // place (masking rows the crash may have left behind), and a
+    // crash between the apply above and this delete re-enters as
+    // a no-op mask over already-removed rows. Only the snapshot —
+    // and of it, only the SETTLED ids (r14 advice, high): a
+    // tombstone whose doc_id is not in the docs sibling is a
+    // PRE-INGEST takedown (the delete stream's contract lets dead
+    // ids arrive before their docs) with nothing to reclaim — it
+    // must KEEP masking until its doc is actually ingested, or
+    // delete → compact → ingest of the same id would silently lose
+    // the takedown and make the id recyclable. Pending ids are
+    // re-appended as a fresh tombstone file BEFORE the snapshot
+    // files drop: a crash between the two leaves a duplicate mask
+    // (idempotent), never an unmasked takedown.
+    dead.foreach { dd =>
+      store.reappendPending(dd,
+        Some(spark.read.parquet(s"$path/$SubstrDocsDir")), path,
+        pin = false)
+      store.reclaim(fs, snapshot)
+    }
+    dirty.length.toLong
   }
 
   /** Incremental [[exactSubstr]]: the duplicated-span report for a NEW

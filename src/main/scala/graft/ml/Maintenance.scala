@@ -21,9 +21,10 @@ import org.apache.spark.sql.functions._
   *
   * Single-writer discipline is ENFORCED, not prose (r15 verdict item
   * 4): [[maintainIndex]] holds the exclusive [[MaintainingMarker]]
-  * writer lock for the sweep's duration — the
-  * [[graft.ml.Dedup.compactSubstrIndex]] lock pattern generalized to
-  * every family — and every ingest append ([[graft.streaming
+  * writer lock for the sweep's duration ([[withWriterLock]], the one
+  * lock acquisition every single-writer op shares — the public
+  * [[graft.ml.Dedup.compactSubstrIndex]] included) — and every ingest
+  * append ([[graft.streaming
   * .BatchCommit]], [[graft.streaming.StreamingNearDup]], the substr
   * append) and tombstone delete REFUSES loudly while it exists, so a
   * sweep racing a live writer surfaces as an error on the writer, not
@@ -91,6 +92,16 @@ object Maintenance {
       case e: java.io.IOException if lockHeld(e) => held(e)
     }
     try body finally { fs.delete(marker, false); () }
+  }
+
+  /** The breakStaleLock remedy: drop the [[MaintainingMarker]] a
+    * crashed owner left at `root`, before re-entering
+    * [[withWriterLock]].
+    */
+  private[graft] def clearWriterLock(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path): Unit = {
+    fs.delete(new org.apache.hadoop.fs.Path(root, MaintainingMarker), false)
+    ()
   }
 
   /** One index family's measured maintenance debt.
@@ -185,19 +196,14 @@ object Maintenance {
     // release leaves debt UNDER the thresholds — exactly the state
     // where fire=false — and the documented remedy must still clear
     // the marker or writers block forever (r16 session review)
-    if (breakStaleLock) {
-      val m = new org.apache.hadoop.fs.Path(s"$path/$MaintainingMarker")
-      m.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .delete(m, false)
-      ()
-    }
+    val root = new org.apache.hadoop.fs.Path(path)
+    val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    if (breakStaleLock) clearWriterLock(fs, root)
     val debt = compactionDebt(spark, path, family)
     val fire = debt.tombstoneIds > thresholds.maxTombstoneIds ||
       debt.streamBacklog > thresholds.maxStreamBacklog ||
       debt.multiFileBuckets > thresholds.maxMultiFileBuckets
     if (fire) {
-      val root = new org.apache.hadoop.fs.Path(path)
-      val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
       withWriterLock(fs, root, "maintainIndex") {
         val store = ServedStore.named(family)
         if (debt.streamBacklog > 0L) store.fold.foreach(f => f(spark, path))
@@ -211,8 +217,8 @@ object Maintenance {
   }
 
   /** Coalesce the multi-file bucket directories through the family's
-    * OWN committed-stage protocol ([[Similarity.CompactStageDir]] +
-    * `_parts` + [[Similarity.applyCompactionStage]]'s dynamic
+    * OWN committed-stage protocol (the
+    * [[graft.sources.StagedRewrite]] bucket stage's dynamic
     * partition overwrite) — NOT a per-directory
     * [[graft.sources.Layout.compact]], whose swap temps
     * (`bkt=7_precompact`, `bkt=7_compacting`) would be created INSIDE
@@ -224,7 +230,7 @@ object Maintenance {
     * staged protocol, a crash anywhere is repaired by the family
     * compactor's own entry replay (every bucketed compactor replays a
     * committed stage first), rows are unchanged (same content, fewer
-    * files), and appends stay refused via requireNoCommittedStage
+    * files), and appends stay refused via requireNoCommittedBucketStage
     * until the replay lands. The repartition on the bucket column
     * bounds output files at ~one per bucket per 128 MB.
     */
@@ -240,18 +246,11 @@ object Maintenance {
         .count(_.getPath.getName.endsWith(".parquet")) > 1)
       .map(_.getPath.getName.stripPrefix(bucketPrefix).toLong)
     if (multi.isEmpty) return
-    val stagePath = s"$path/${Similarity.CompactStageDir}"
-    fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
+    graft.sources.StagedRewrite.replayBuckets(spark, path, partCol)
     val idx = spark.read.parquet(path)
-    idx.filter(Similarity.partitionLits(idx, partCol, multi))
-      .repartition(col(partCol))
-      .write.mode("overwrite").parquet(stagePath)
-    import spark.implicits._
-    multi.toDF("part").coalesce(1).write.mode("overwrite")
-      .parquet(s"$stagePath/_parts")
-    Similarity.applyCompactionStage(spark, path, partCol)
-    fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-    ()
+    graft.sources.StagedRewrite.rewriteBuckets(spark, path, partCol,
+      idx.filter(Similarity.partitionLits(idx, partCol, multi))
+        .repartition(col(partCol)), multi)
   }
 
   /** The in-stream auto-maintenance hook (r15 verdict item 6):

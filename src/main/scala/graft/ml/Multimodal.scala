@@ -448,8 +448,11 @@ object Multimodal {
     */
   def compactPhashIndex(spark: SparkSession, path: String): Long =
     Similarity.compactFlatIndex(spark, path, ServedStore.Phash,
-      PhashCompactStageDir, "compactPhashIndex",
-      "run foldStreamIntoPhashIndex first")
+      PhashStage, "compactPhashIndex", "foldStreamIntoPhashIndex")
+
+  /** The phash tier's swap stage, shared by its compaction and fold. */
+  private[ml] val PhashStage =
+    graft.sources.StagedRewrite.SwapStage.compaction(PhashCompactStageDir)
 
   /** Drain committed streamed-signature batches into the phash base —
     * [[Similarity.foldStreamIntoFlatIndex]]'s move-first staged
@@ -457,7 +460,7 @@ object Multimodal {
     */
   def foldStreamIntoPhashIndex(spark: SparkSession, path: String): Long =
     Similarity.foldStreamIntoFlatIndex(spark, path, "media_id",
-      PhashCols, PhashCompactStageDir)
+      PhashCols, PhashStage)
 
   /** The served READ of the phash tier: signature rows from every
     * root (base + committed streamed partitions), tombstones always
@@ -475,21 +478,11 @@ object Multimodal {
     val raw = paths.map(p => spark.read.parquet(p)
         .select(col("media_id"), col("ahash"), col("dhash")))
       .reduce(_.unionByName(_))
-    val stagePresent = {
-      val base = new org.apache.hadoop.fs.Path(basePath)
-      base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(
-          s"$basePath/$PhashCompactStageDir"))
-    }
-    def mixedGenerations: Boolean = {
-      val gens = raw.inputFiles.map { f =>
-        val n = f.substring(f.lastIndexOf('/') + 1)
-        if (n.startsWith("graftc-")) n.split("-")(1) else "base"
-      }.distinct
-      gens.length > 1
-    }
+    val base = new org.apache.hadoop.fs.Path(basePath)
     val deduped =
-      if (paths.size == 1 && !stagePresent && !mixedGenerations) raw
+      if (paths.size == 1 && !PhashStage.mayServeDuplicates(
+          base.getFileSystem(spark.sparkContext.hadoopConfiguration), base,
+          raw.inputFiles.toSeq)) raw
       else raw.groupBy(col("media_id"))
         .agg(max(col("ahash")).as("ahash"), max(col("dhash")).as("dhash"))
     ServedStore.Phash.mask(spark, Seq(basePath), deduped)

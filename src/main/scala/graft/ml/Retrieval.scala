@@ -395,10 +395,7 @@ object Retrieval {
     val fs = docsLive
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     recoverDocsSwap(fs, docsLive, docsBak)
-    if (Similarity.compactionStageCommitted(fs, path))
-      Similarity.applyCompactionStage(spark, path, "bkt")
-    val stagePath = s"$path/${Similarity.CompactStageDir}"
-    fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
+    graft.sources.StagedRewrite.replayBuckets(spark, path, "bkt")
     val root = new org.apache.hadoop.fs.Path(
       path + Similarity.StreamSiblingSuffix)
     // HIDE first — the shared claim step (see claimPendingBatches)
@@ -415,23 +412,9 @@ object Retrieval {
       .filter(fs.exists(_)).map(_.toString)
     val postingDirs = sub("postings")
     val dlDirs = sub("docs")
-    if (postingDirs.nonEmpty) {
-      val postings = postingDirs
-        .map(spark.read.parquet(_)).reduce(_.unionByName(_))
-      val tf = spark.read.parquet(path)
-      // bounded driver action: distinct touched buckets (≤ n_buckets)
-      val touched = postings.select(col("bkt").cast("long")).distinct()
-        .collect().map(_.getLong(0))
-      tf.filter(Similarity.partitionLits(tf, "bkt", touched.toSeq))
-        .unionByName(postings).distinct()
-        .write.mode("overwrite").parquet(stagePath)
-      import spark.implicits._
-      touched.toSeq.toDF("part").coalesce(1).write.mode("overwrite")
-        .parquet(s"$stagePath/_parts")
-      Similarity.applyCompactionStage(spark, path, "bkt")
-      fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-      ()
-    }
+    if (postingDirs.nonEmpty)
+      Similarity.foldIntoBuckets(spark, path, "bkt", postingDirs
+        .map(spark.read.parquet(_)).reduce(_.unionByName(_)))
     if (dlDirs.nonEmpty) {
       // doc lengths: live ∪ folded, distinct (refold-convergent), via
       // the atomic swap
@@ -443,16 +426,7 @@ object Retrieval {
       swapInDocsTmp(fs, docsLive, docsBak, docsTmp)
     }
     // drop the data LAST, keep the stub (the replay ledger)
-    pending.foreach { p =>
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (n != "_SUCCESS" && n != "_GRAFT_BATCH_SIG"
-            && n != Similarity.FoldedMarker) {
-          fs.delete(st.getPath, true)
-          ()
-        }
-      }
-    }
+    Similarity.dropFoldedData(fs, pending)
     pending.size.toLong
   }
 
@@ -468,10 +442,7 @@ object Retrieval {
     // (restoring any bucket the crashed overwrite half-replaced)
     // WITHOUT touching the tombstones — post-crash deletions must
     // survive into the normal pass below
-    if (Similarity.compactionStageCommitted(fs, path))
-      Similarity.applyCompactionStage(spark, path, "bkt")
-    fs.delete(new org.apache.hadoop.fs.Path(
-      s"$path/${Similarity.CompactStageDir}"), true)
+    graft.sources.StagedRewrite.replayBuckets(spark, path, "bkt")
     // pin the tombstone table AS A FILE LIST at entry and delete only
     // those files at the end — a tombstone appended concurrently by a
     // Bm25Ingest.startDeletes stream lands in a new file, survives,
@@ -483,38 +454,23 @@ object Retrieval {
         // tombstones also mask streamed postings, which this
         // compaction never rewrites. Data-less stubs (the fold's
         // replay ledger) no longer guard anything.
-        require(!Similarity.streamSiblingHoldsData(fs,
-            new org.apache.hadoop.fs.Path(
-              path + Similarity.StreamSiblingSuffix)),
-          s"compactBm25Index: streamed-appends sibling " +
-            s"$path${Similarity.StreamSiblingSuffix} holds un-folded " +
-            "data — compacting the base alone would un-mask deleted " +
-            "rows in streamed partitions; run foldStreamIntoBm25Index " +
-            "first")
+        Similarity.requireStreamFolded(fs, path, "compactBm25Index",
+          "foldStreamIntoBm25Index")
         val dead = ServedStore.Bm25.idsIn(spark, snapshot)
         val tf = spark.read.parquet(path)
         val dirty = tf.select(col("doc_id"), col("bkt"))
           .join(dead, Seq("doc_id"))
           .select(col("bkt").cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        if (dirty.nonEmpty) {
-          // durable survivor stage + committed dirty-bucket marker,
-          // then the replayable apply — see compactIvfIndex's crash
-          // contract (the stage, not the index, is the source of
-          // truth once committed); partitionLits keeps the rewrite
-          // scan pruned to the dirty buckets
-          val stagePath =
-            s"$path/${Similarity.CompactStageDir}"
-          tf.filter(Similarity.partitionLits(tf, "bkt", dirty.toSeq))
-            .join(dead, Seq("doc_id"), "left_anti")
-            .write.mode("overwrite").parquet(stagePath)
-          import spark.implicits._
-          dirty.toSeq.toDF("part")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$stagePath/_parts")
-          Similarity.applyCompactionStage(spark, path, "bkt")
-          fs.delete(new org.apache.hadoop.fs.Path(stagePath), true)
-        }
+          .collect().map(_.getLong(0)).toSeq
+        // durable survivor stage + committed dirty-bucket marker, then
+        // the replayable apply — see compactIvfIndex's crash contract
+        // (the stage, not the index, is the source of truth once
+        // committed); partitionLits keeps the rewrite scan pruned to
+        // the dirty buckets
+        if (dirty.nonEmpty)
+          graft.sources.StagedRewrite.rewriteBuckets(spark, path, "bkt",
+            tf.filter(Similarity.partitionLits(tf, "bkt", dirty))
+              .join(dead, Seq("doc_id"), "left_anti"), dirty)
         // doc-length swap: materialize the survivor table into tmp,
         // then the two renames (each atomic on the FS)
         fs.delete(docsTmp, true)
@@ -598,7 +554,7 @@ object Retrieval {
     */
   def appendBm25Index(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, path: String): Unit = {
-    Similarity.requireNoCommittedStage(
+    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
       new org.apache.hadoop.fs.Path(path).getFileSystem(
         spark.sparkContext.hadoopConfiguration),
       path, "appendBm25Index")

@@ -65,6 +65,24 @@ private[graft] final case class ServedStore private (
   def append(ids: DataFrame, root: String): Unit =
     ids.write.mode("append").parquet(s"$root/$deletedDir")
 
+  /** The settled-only reclaim's re-append: the ids of `dead` with no
+    * row among `live` (None — the store holds no rows yet) are
+    * takedowns that raced ahead of their rows' ingest; they go back
+    * as a fresh tombstone file, outside the snapshot a compactor is
+    * about to reclaim, so they keep masking the rows' eventual
+    * arrival. `pin` materializes the pending set once, for callers
+    * whose `live` read is costly to repeat between the emptiness
+    * probe and the append.
+    */
+  def reappendPending(dead: DataFrame, live: Option[DataFrame],
+      root: String, pin: Boolean): Unit = {
+    val pending = live.fold(dead) { l =>
+      val p = antiJoin(dead, l.select(col(idCol)))
+      if (pin) p.localCheckpoint() else p
+    }
+    if (!pending.isEmpty) append(pending, root)
+  }
+
   /** Wire a DELETE stream: each micro-batch of [[idCol]] rows is
     * [[delete]]d from the store at `root`. No BatchCommit partition
     * protocol, deliberately: tombstone appends are idempotent AT READ
@@ -168,7 +186,8 @@ private[graft] object ServedStore {
   // store has no stream sibling to fold
   val Substr = ServedStore("substr", "doc_id", Dedup.SubstrDeletedDir,
     "bkt=", "deleteFromSubstrIndex", None,
-    (s, p) => Dedup.compactSubstrIndex(s, p))
+    // the unlocked core: the sweep that runs it already holds the lock
+    (s, p) => Dedup.compactSubstrIndexLocked(s, p))
   // corpus: multi-file `ingest_batch=` dirs are the NORMAL shape (one
   // file set per committed trigger — small-file re-binning is
   // Layout.compactPartitions' job), so its prefix stays empty and only

@@ -767,84 +767,37 @@ object Similarity {
     */
   def compactBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
-    compactFlatIndex(spark, path, ServedStore.Binary,
-      BinCompactStageDir, "compactBinaryIndex",
-      "run foldStreamIntoBinaryIndex first")
+    compactFlatIndex(spark, path, ServedStore.Binary, BinStage,
+      "compactBinaryIndex", "foldStreamIntoBinaryIndex")
+
+  /** The binary tier's swap stage, shared by its compaction and fold. */
+  private[ml] val BinStage =
+    graft.sources.StagedRewrite.SwapStage.compaction(BinCompactStageDir)
 
   /** The flat-table compaction core — [[compactBinaryIndex]]'s staged
-    * uuid-file-swap parameterized on the store and its stage dir,
+    * uuid-file-swap parameterized on the store and its stage,
     * so the phash tier ([[Multimodal.compactPhashIndex]]) reuses the
     * exact crash protocol instead of re-implementing it.
     */
   private[ml] def compactFlatIndex(spark: org.apache.spark.sql.SparkSession,
-      path: String, store: ServedStore, stageDir: String,
-      what: String, foldAdvice: String): Long = {
+      path: String, store: ServedStore,
+      stage: graft.sources.StagedRewrite.SwapStage, what: String,
+      foldOp: String): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    require(!streamSiblingHoldsData(fs,
-        new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
-      s"$what: streamed-appends sibling " +
-        s"$path$StreamSiblingSuffix holds un-folded data — compacting " +
-        "the base alone would un-mask deleted rows in streamed " +
-        s"partitions; $foldAdvice")
-    val stage = new org.apache.hadoop.fs.Path(s"$path/$stageDir")
+    requireStreamFolded(fs, path, what, foldOp)
     // a committed stage means the previous run died mid-apply —
     // finish from the stage first, then fall through to the normal
     // pass (post-crash tombstone appends must still be honored)
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
-      applyFlatStage(fs, root, stage)
-    fs.delete(stage, true)
+    stage.replay(fs, root)
     val snapshot = store.snapshot(fs, path)
     if (snapshot.isEmpty) return 0L
     val dead = store.idsIn(spark, snapshot)
     val nDead = dead.count()
-    store.antiJoin(spark.read.parquet(path), dead)
-      .write.mode("overwrite").parquet(stage.toString)
-    // the uuid marker must exist before the apply can run; written
-    // before _SUCCESS? the parquet write above already planted
-    // _SUCCESS — so the commit point is the MARKER, checked together
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID"),
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    applyFlatStage(fs, root, stage)
-    fs.delete(stage, true)
+    stage.commitFlat(fs, root, store.antiJoin(spark.read.parquet(path), dead))
     store.reclaim(fs, snapshot)
     nDead
   }
-
-  /** Replay-safe apply of a committed binary stage: staged files move
-    * into the root under `graftc-<uuid>-` names FIRST, then root data
-    * files not carrying the uuid are deleted. The order is the
-    * serving guarantee (the r10 advice finding): a concurrent reader
-    * inside the apply window sees old∪new — duplicates, which the
-    * read path dedups on vec_id — never a partially-empty table.
-    * Idempotent across crashes: already-moved files are no longer in
-    * the stage, uuid-named files are never deleted, so a replay
-    * finishes the move and the sweep from any intermediate state.
-    */
-  private[graft] def applyFlatStage(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path): Unit =
-    graft.sources.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID")) match {
-      case None => () // the parquet write's own _SUCCESS landed but
-        // the uuid marker didn't: the stage is NOT committed (the
-        // marker is the real commit point) — discardable, the
-        // tombstones still mask everything
-      case Some(uuid) =>
-        val prefix = s"graftc-$uuid-"
-        fs.listStatus(stage).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach { p =>
-            require(fs.rename(p,
-              new org.apache.hadoop.fs.Path(root, prefix + p.getName)),
-              s"could not move staged file $p into $root")
-          }
-        fs.listStatus(root).toSeq.map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet")
-            && !p.getName.startsWith(prefix))
-          .foreach { p => fs.delete(p, false); () }
-    }
 
   /** Fold committed streamed-append batches INTO the binary base —
     * the flat-table fold (the IVF/BM25 siblings move partition
@@ -853,7 +806,7 @@ object Similarity {
     * streamed deduped on vec_id (refolds and crashed replays
     * converge — a batch whose rows already reached the base is
     * absorbed, never doubled), uuid-swap the stage in through
-    * [[applyFlatStage]]'s reader-safe apply, THEN flip the
+    * the swap stage's reader-safe apply, THEN flip the
     * [[FoldedMarker]]s and drop the batch data, leaving the data-less
     * replay-ledger stubs. Move-first (the REVERSE of the IVF/BM25
     * claim order) is what the serving read's vec_id dedup buys: a
@@ -872,23 +825,21 @@ object Similarity {
   def foldStreamIntoBinaryIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long =
     foldStreamIntoFlatIndex(spark, path, "vec_id",
-      Seq("vec_id", "bits"), BinCompactStageDir)
+      Seq("vec_id", "bits"), BinStage)
 
   /** The flat-table fold core — [[foldStreamIntoBinaryIndex]]'s
     * move-first staged rewrite parameterized on the id/payload
-    * columns and stage dir, reused by the phash tier
+    * columns and stage, reused by the phash tier
     * ([[Multimodal.foldStreamIntoPhashIndex]]).
     */
   private[ml] def foldStreamIntoFlatIndex(
       spark: org.apache.spark.sql.SparkSession, path: String,
-      idCol: String, cols: Seq[String], stageDir: String): Long = {
+      idCol: String, cols: Seq[String],
+      stage: graft.sources.StagedRewrite.SwapStage): Long = {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(s"$path/$stageDir")
     // finish a crashed apply from its committed stage first
-    if (fs.exists(new org.apache.hadoop.fs.Path(stage, "_SUCCESS")))
-      applyFlatStage(fs, root, stage)
-    fs.delete(stage, true)
+    stage.replay(fs, root)
     val sib = new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)
     val pending = listPendingBatches(fs, sib)
     if (pending.isEmpty) return 0L
@@ -896,28 +847,14 @@ object Similarity {
       .map(p => spark.read.parquet(p.toString))
       .reduce(_.unionByName(_))
       .select(cols.map(col): _*)
-    spark.read.parquet(path).select(cols.map(col): _*)
+    stage.commitFlat(fs, root, spark.read.parquet(path)
+      .select(cols.map(col): _*)
       .unionByName(streamed)
-      .dropDuplicates(idCol)
-      .write.mode("overwrite").parquet(stage.toString)
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID"),
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    applyFlatStage(fs, root, stage)
-    fs.delete(stage, true)
+      .dropDuplicates(idCol))
     // rows are in the base now — ONLY now stop serving the stream
     // copies (they'd just dedup away) and drop the batch data
     markBatchesFolded(fs, pending)
-    pending.foreach { p =>
-      fs.listStatus(p).foreach { st =>
-        val nm = st.getPath.getName
-        if (nm != "_SUCCESS" && nm != "_GRAFT_BATCH_SIG"
-            && nm != FoldedMarker) {
-          fs.delete(st.getPath, true)
-          ()
-        }
-      }
-    }
+    dropFoldedData(fs, pending)
     pending.size.toLong
   }
 
@@ -993,22 +930,10 @@ object Similarity {
     // root state) necessarily mixes generations in the listing. The
     // stage probe stays as the cheap first check (it also covers a
     // crashed mid-apply, whose listing is mixed anyway).
-    val stagePresent = {
-      val base = new org.apache.hadoop.fs.Path(basePath)
-      base.getFileSystem(spark.sparkContext.hadoopConfiguration)
-        .exists(new org.apache.hadoop.fs.Path(
-          s"$basePath/$BinCompactStageDir"))
-    }
+    val base = new org.apache.hadoop.fs.Path(basePath)
     val rawUnion = paths.map(p => spark.read.parquet(p)
         .select(col("vec_id"), col("bits")))
       .reduce(_.unionByName(_))
-    def mixedGenerations: Boolean = {
-      val gens = rawUnion.inputFiles.map { f =>
-        val n = f.substring(f.lastIndexOf('/') + 1)
-        if (n.startsWith("graftc-")) n.split("-")(1) else "base"
-      }.distinct
-      gens.length > 1
-    }
     // the dedup runs over the bit WORDS unpacked to long columns: an
     // array-valued aggregate buffer would force a SortAggregate pair
     // per consumer, while all-long columns keep it a plain hash
@@ -1019,8 +944,9 @@ object Similarity {
     // explicit hardening flags, NOT frame reference equality (r16
     // advice: `x eq y` silently flips to "always materialize" if a
     // refactor returns a new identical frame on the quiescent path)
-    val needsDedup = !(paths.size == 1 && !stagePresent
-      && !mixedGenerations)
+    val needsDedup = paths.size != 1 || BinStage.mayServeDuplicates(
+      base.getFileSystem(spark.sparkContext.hadoopConfiguration), base,
+      rawUnion.inputFiles.toSeq)
     val raw =
       if (!needsDedup)
         rawUnion
@@ -1807,8 +1733,9 @@ object Similarity {
     */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       newEmbeddings: DataFrame, path: String): Unit = {
-    requireNoCommittedStage(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration),
+    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
+      new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration),
       path, "appendIvfIndex")
     requireFreshIds(spark, newEmbeddings, path, "appendIvfIndex")
     val cents = spark.read.parquet(s"$path/$CentroidsDir")
@@ -1926,48 +1853,11 @@ object Similarity {
       vecIds: DataFrame, path: String): Unit =
     ServedStore.Ivf.delete(spark, vecIds, path)
 
-  /** Reclaim the compaction debt [[deleteFromIvfIndex]] accrues:
-    * physically rewrite ONLY the `cell=` partitions that contain
-    * tombstoned rows (detected by a column-pruned (vec_id, cell)
-    * scan), drop any cell directory left empty, then drop exactly the
-    * tombstone FILES this run applied (a file-list snapshot pinned at
-    * entry — tombstones appended concurrently by a delete stream land
-    * in new files, survive the cleanup, and keep masking until the
-    * next compaction). Cost follows the DIRTY cells, never the
-    * corpus — clean cells keep their exact files (spec-measured
-    * byte-identical). After compaction a formerly-deleted vec_id MAY
-    * be re-appended — its physical rows are gone, so it is a
-    * genuinely new vector; before compaction the tombstone still
-    * masks it. Single-writer maintenance op, like the append paths.
-    * Returns the number of cell partitions rewritten or removed.
-    *
-    * CRASH CONTRACT (the r9 review tightened this): the dirty cells'
-    * survivors are first staged DURABLY under `_graft_compact_stage`
-    * and committed with a dirty-partition marker; only then does the
-    * dynamic partition overwrite touch the index, and the tombstones
-    * are deleted LAST. A crash anywhere outside the overwrite's own
-    * delete-then-rename commit leaves serving result-identical (the
-    * tombstones still mask, uncommitted stages are discarded); a
-    * crash INSIDE that commit can leave a dirty cell's files
-    * half-replaced — serving those cells is degraded (missing
-    * survivors) until the next compactIvfIndex entry, which REPLAYS
-    * the apply from the committed stage and restores them exactly
-    * (without the stage, a re-run would mis-detect the damaged cell
-    * as clean and drop the tombstones over lost rows). Re-runs
-    * therefore always converge, and new deletions appended after a
-    * crash survive into the post-replay pass.
+  /** The bucket stage's directory (a [[graft.sources.StagedRewrite]]
+    * name; crash specs build stage states by hand).
     */
-  private[ml] val CompactStageDir = "_graft_compact_stage"
-
-  /** True iff a compaction stage under `path` is COMMITTED: its
-    * `_parts` marker table (the dirty-partition list, written LAST)
-    * carries a `_SUCCESS`. An uncommitted stage is a crashed staging
-    * write — discardable, the tombstones still cover everything.
-    */
-  private[ml] def compactionStageCommitted(
-      fs: org.apache.hadoop.fs.FileSystem, path: String): Boolean =
-    fs.exists(new org.apache.hadoop.fs.Path(
-      s"$path/$CompactStageDir/_parts/_SUCCESS"))
+  private[ml] val CompactStageDir =
+    graft.sources.StagedRewrite.BucketStageDir
 
   /** isin over a partition column in its ON-DISK inferred type: the
     * directory value `cell=5` reads back as int, and the literals
@@ -1983,6 +1873,22 @@ object Similarity {
         case _ => v
       }
     }: _*)
+
+  /** The posting folds' shared staging (IVF cells, BM25 buckets): the
+    * base rows of the partitions `rows` touch ∪ `rows`, DISTINCT — so
+    * a refold of rows a crashed run already applied converges instead
+    * of duplicating — rewritten through the bucket stage.
+    */
+  private[ml] def foldIntoBuckets(spark: org.apache.spark.sql.SparkSession,
+      path: String, partCol: String, rows: DataFrame): Unit = {
+    val idx = spark.read.parquet(path)
+    // bounded driver action: distinct touched partitions (≤ their count)
+    val touched = rows.select(col(partCol).cast("long")).distinct()
+      .collect().map(_.getLong(0)).toSeq
+    graft.sources.StagedRewrite.rewriteBuckets(spark, path, partCol,
+      idx.filter(partitionLits(idx, partCol, touched))
+        .unionByName(rows).distinct(), touched)
+  }
 
   /** The fold entry's shared claim step: list the stream sibling's
     * COMMITTED batch partitions that still hold data (folded stubs
@@ -2029,62 +1935,38 @@ object Similarity {
       if (!fs.exists(m)) fs.create(m, true).close()
     }
 
-  /** Refusal every BASE-table append must make while a committed
-    * compaction stage exists: the next maintenance entry REPLAYS the
-    * stage over its dirty partitions with a dynamic partition
-    * overwrite, which would silently erase rows appended in between
-    * (the r10 review's substr finding, generalized — streamed SIBLING
-    * appends are exempt, replay never touches the sibling). A failed
-    * compaction clears its writer lock on the way out but leaves the
-    * committed stage, so the stage check is the one that holds.
+  /** Drop the folded batches' data, keeping each partition's
+    * `_SUCCESS`, `_GRAFT_BATCH_SIG` and [[FoldedMarker]] — the
+    * data-less stub that keeps the BatchCommit replay ledger alive.
+    * Every fold calls this LAST, once the rows are in the base.
     */
-  private[ml] def requireNoCommittedStage(
-      fs: org.apache.hadoop.fs.FileSystem, path: String,
-      what: String): Unit =
-    require(!compactionStageCommitted(fs, path),
-      s"$what: a committed compaction stage exists on $path — run " +
-        "the compactor to replay it before appending; rows appended " +
-        "now would be overwritten by the replay")
-
-  /** Apply a COMMITTED compaction stage to the index: dynamic-
-    * partition-overwrite the staged survivor rows into their
-    * `partCol=` directories and drop the dirty directories the stage
-    * holds no rows for (fully-dead partitions). The stage — not the
-    * index — is the source of truth for the dirty partitions'
-    * surviving rows, which is what makes this REPLAYABLE: a crash
-    * inside the overwrite's own delete-then-rename commit can lose a
-    * dirty partition's files, and a replay restores them from the
-    * stage (the plain re-run would mis-detect such a partition as
-    * clean, drop the tombstones, and silently lose the survivors —
-    * the r9 review's crash hole).
-    */
-  private[ml] def applyCompactionStage(
-      spark: org.apache.spark.sql.SparkSession, path: String,
-      partCol: String): Unit = {
-    val fs = new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = s"$path/$CompactStageDir"
-    val dirtyVals = spark.read.parquet(s"$stage/_parts")
-      .collect().map(_.getLong(0)).toSet
-    // a stage whose every dirty partition was fully dead holds zero
-    // data files — reading it would fail schema inference, and there
-    // is nothing to overwrite anyway
-    val hasData = fs.listStatus(new org.apache.hadoop.fs.Path(stage))
-      .exists(_.getPath.getName.endsWith(".parquet"))
-    val present: Set[Long] = if (hasData) {
-      val staged = spark.read.parquet(stage)
-      staged.write.mode("overwrite")
-        .option("partitionOverwriteMode", "dynamic")
-        .partitionBy(partCol).parquet(path)
-      staged.select(col(partCol).cast("long")).distinct()
-        .collect().map(_.getLong(0)).toSet
-    } else Set.empty
-    (dirtyVals -- present).foreach { v =>
-      fs.delete(new org.apache.hadoop.fs.Path(s"$path/$partCol=$v"),
-        true)
-      ()
+  private[ml] def dropFoldedData(fs: org.apache.hadoop.fs.FileSystem,
+      batches: Seq[org.apache.hadoop.fs.Path]): Unit =
+    batches.foreach { p =>
+      fs.listStatus(p).foreach { st =>
+        val n = st.getPath.getName
+        if (n != "_SUCCESS" && n != "_GRAFT_BATCH_SIG"
+            && n != FoldedMarker) {
+          fs.delete(st.getPath, true)
+          ()
+        }
+      }
     }
-  }
+
+  /** The compactors' refusal while the streamed-appends sibling holds
+    * un-folded data: the tombstones also mask streamed rows, which a
+    * base compaction never rewrites, so dropping them would silently
+    * un-mask deleted rows — `foldOp` must drain the sibling first.
+    * Data-less fold stubs (the replay ledger) no longer guard anything.
+    */
+  private[ml] def requireStreamFolded(fs: org.apache.hadoop.fs.FileSystem,
+      path: String, what: String, foldOp: String): Unit =
+    require(!streamSiblingHoldsData(fs,
+        new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
+      s"$what: streamed-appends sibling " +
+        s"$path$StreamSiblingSuffix holds un-folded data — compacting " +
+        "the base alone would un-mask deleted rows in streamed " +
+        s"partitions; run $foldOp first")
 
   /** Fold the streamed-appends sibling INTO the base index, so a
     * standing 100 TB index never needs a rebuild to become compactable
@@ -2121,61 +2003,63 @@ object Similarity {
       path: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagePath = new org.apache.hadoop.fs.Path(
-      s"$path/$CompactStageDir")
     // a committed stage (from a crashed fold OR compaction) replays
     // first — the stage, not the index, is the source of truth for
     // its dirty cells
-    if (compactionStageCommitted(fs, path))
-      applyCompactionStage(spark, path, "cell")
-    fs.delete(stagePath, true)
+    graft.sources.StagedRewrite.replayBuckets(spark, path, "cell")
     val root = new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)
     // HIDE first: claimPendingBatches flips each partition out of the
     // serving union before any row lands in the base
     val pending = claimPendingBatches(fs, root)
     if (pending.isEmpty) return 0L
-    val rows = pending.map(p => spark.read.parquet(p.toString))
-      .reduce(_.unionByName(_))
-    val idx = spark.read.parquet(path)
-    // bounded driver action: distinct touched cells (≤ nCells)
-    val touched = rows.select(col("cell").cast("long")).distinct()
-      .collect().map(_.getLong(0))
-    idx.filter(partitionLits(idx, "cell", touched.toSeq))
-      .unionByName(rows).distinct()
-      .write.mode("overwrite").parquet(stagePath.toString)
-    import spark.implicits._
-    touched.toSeq.toDF("part").coalesce(1).write.mode("overwrite")
-      .parquet(s"$stagePath/_parts")
-    applyCompactionStage(spark, path, "cell")
-    fs.delete(stagePath, true)
+    foldIntoBuckets(spark, path, "cell", pending
+      .map(p => spark.read.parquet(p.toString)).reduce(_.unionByName(_)))
     // drop the data LAST, keep the stub (the replay ledger)
-    pending.foreach { p =>
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (n != "_SUCCESS" && n != "_GRAFT_BATCH_SIG"
-            && n != FoldedMarker) {
-          fs.delete(st.getPath, true)
-          ()
-        }
-      }
-    }
+    dropFoldedData(fs, pending)
     pending.size.toLong
   }
 
+  /** Reclaim the compaction debt [[deleteFromIvfIndex]] accrues:
+    * physically rewrite ONLY the `cell=` partitions that contain
+    * tombstoned rows (detected by a column-pruned (vec_id, cell)
+    * scan), drop any cell directory left empty, then drop exactly the
+    * tombstone FILES this run applied (a file-list snapshot pinned at
+    * entry — tombstones appended concurrently by a delete stream land
+    * in new files, survive the cleanup, and keep masking until the
+    * next compaction). Cost follows the DIRTY cells, never the
+    * corpus — clean cells keep their exact files (spec-measured
+    * byte-identical). After compaction a formerly-deleted vec_id MAY
+    * be re-appended — its physical rows are gone, so it is a
+    * genuinely new vector; before compaction the tombstone still
+    * masks it. Single-writer maintenance op, like the append paths.
+    * Returns the number of cell partitions rewritten or removed.
+    *
+    * CRASH CONTRACT (the r9 review tightened this): the dirty cells'
+    * survivors are first staged DURABLY under `_graft_compact_stage`
+    * and committed with a dirty-partition marker; only then does the
+    * dynamic partition overwrite touch the index, and the tombstones
+    * are deleted LAST. A crash anywhere outside the overwrite's own
+    * delete-then-rename commit leaves serving result-identical (the
+    * tombstones still mask, uncommitted stages are discarded); a
+    * crash INSIDE that commit can leave a dirty cell's files
+    * half-replaced — serving those cells is degraded (missing
+    * survivors) until the next compactIvfIndex entry, which REPLAYS
+    * the apply from the committed stage and restores them exactly
+    * (without the stage, a re-run would mis-detect the damaged cell
+    * as clean and drop the tombstones over lost rows). Re-runs
+    * therefore always converge, and new deletions appended after a
+    * crash survive into the post-replay pass.
+    */
   def compactIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
     val fs = new org.apache.hadoop.fs.Path(path)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stagePath = new org.apache.hadoop.fs.Path(
-      s"$path/$CompactStageDir")
     // a committed stage means the previous run died mid-apply: finish
     // the apply FROM THE STAGE first (restoring any dirty cell the
     // crashed overwrite half-replaced), but do NOT touch the
     // tombstones here — deletions appended after the crash must
     // survive into the normal pass below
-    if (compactionStageCommitted(fs, path))
-      applyCompactionStage(spark, path, "cell")
-    fs.delete(stagePath, true)
+    graft.sources.StagedRewrite.replayBuckets(spark, path, "cell")
     // pin the tombstone table AS A FILE LIST at entry: the mask this
     // run applies is exactly these files, and the final cleanup
     // deletes exactly these files — a tombstone appended concurrently
@@ -2192,35 +2076,23 @@ object Similarity {
         // rewrites — refuse loudly. Once foldStreamIntoIvfIndex has
         // drained every batch to a stub, the sibling no longer guards
         // anything and compaction proceeds.
-        require(!streamSiblingHoldsData(fs, new org.apache.hadoop.fs.Path(
-            path + StreamSiblingSuffix)),
-          s"compactIvfIndex: streamed-appends sibling " +
-            s"$path$StreamSiblingSuffix holds un-folded data — " +
-            "compacting the base alone would un-mask deleted rows in " +
-            "streamed partitions; run foldStreamIntoIvfIndex first")
+        requireStreamFolded(fs, path, "compactIvfIndex",
+          "foldStreamIntoIvfIndex")
         val dead = ServedStore.Ivf.idsIn(spark, snapshot)
         val idx = spark.read.parquet(path)
         // bounded driver action: the distinct dirty-cell ids (≤ nCells)
         val dirty = idx.select(col("vec_id"), col("cell"))
           .join(dead, Seq("vec_id"))
           .select(col("cell").cast("long")).distinct()
-          .collect().map(_.getLong(0))
-        if (dirty.nonEmpty) {
-          // stage the survivors DURABLY before touching any index
-          // file (localCheckpoint would die with the driver — the
-          // stage is what makes a mid-overwrite crash recoverable),
-          // then commit the stage with the dirty-partition marker;
-          // partitionLits keeps the rewrite scan partition-pruned
-          idx.filter(partitionLits(idx, "cell", dirty.toSeq))
-            .join(dead, Seq("vec_id"), "left_anti")
-            .write.mode("overwrite").parquet(stagePath.toString)
-          import spark.implicits._
-          dirty.toSeq.toDF("part")
-            .coalesce(1).write.mode("overwrite")
-            .parquet(s"$stagePath/_parts")
-          applyCompactionStage(spark, path, "cell")
-          fs.delete(stagePath, true)
-        }
+          .collect().map(_.getLong(0)).toSeq
+        // stage the survivors DURABLY before touching any index file
+        // (localCheckpoint would die with the driver — the stage is
+        // what makes a mid-overwrite crash recoverable); partitionLits
+        // keeps the rewrite scan partition-pruned
+        if (dirty.nonEmpty)
+          graft.sources.StagedRewrite.rewriteBuckets(spark, path, "cell",
+            idx.filter(partitionLits(idx, "cell", dirty))
+              .join(dead, Seq("vec_id"), "left_anti"), dirty)
         // tombstones go LAST: every earlier crash point leaves them in
         // place, so the mask keeps serving correct and a re-run (which
         // replays any committed stage first) converges. Delete ONLY
@@ -2538,8 +2410,9 @@ object Similarity {
     */
   def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       newEmbeddings: DataFrame, path: String): Unit = {
-    requireNoCommittedStage(new org.apache.hadoop.fs.Path(path)
-      .getFileSystem(spark.sparkContext.hadoopConfiguration),
+    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
+      new org.apache.hadoop.fs.Path(path)
+        .getFileSystem(spark.sparkContext.hadoopConfiguration),
       path, "appendIvfPqIndex")
     requireFreshIds(spark, newEmbeddings, path, "appendIvfPqIndex")
     val cents = spark.read.parquet(s"$path/$CentroidsDir")

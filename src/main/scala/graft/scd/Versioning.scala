@@ -206,6 +206,8 @@ object Versioning {
   }
 
   private[scd] val ForgetStageDir = "_graft_forget_stage"
+  private val ForgetStage =
+    graft.sources.StagedRewrite.SwapStage.forget(ForgetStageDir)
 
   /** The per-table forgotten-ids ledger sibling — the compliance
     * evidence an erasure leaves behind (ids only, no erased data).
@@ -347,11 +349,7 @@ object Versioning {
     val root = new org.apache.hadoop.fs.Path(path)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root), s"forget: no table at $path")
-    if (breakStaleLock) {
-      fs.delete(new org.apache.hadoop.fs.Path(root,
-        graft.ml.Maintenance.MaintainingMarker), false)
-      ()
-    }
+    if (breakStaleLock) graft.ml.Maintenance.clearWriterLock(fs, root)
     graft.ml.Maintenance.withWriterLock(fs, root, "forget") {
       forgetLocked(spark, ids, root, fs, path, key)
     }
@@ -361,14 +359,10 @@ object Versioning {
       ids: DataFrame, root: org.apache.hadoop.fs.Path,
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       key: String): Long = {
-    val stage = new org.apache.hadoop.fs.Path(root, ForgetStageDir)
-    val sid = new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID")
     // finish a crashed committed apply, then fall through (the erase
     // this call carries must still be honored by the normal pass); an
     // uncommitted stage is discardable staging debris
-    if (graft.sources.Markers.read(fs, sid).isDefined)
-      applyForgetStage(fs, root, stage)
-    fs.delete(stage, true)
+    ForgetStage.replay(fs, root)
     // durable intent FIRST: the ledger records the erasure before any
     // data file moves, so every later crash point leaves the id set
     // recoverable; deduped so a replay cannot grow the evidence
@@ -387,7 +381,7 @@ object Versioning {
     val rootListing = fs.listStatus(root).toSeq
     val partDirs = rootListing.filter(st =>
       st.isDirectory && st.getPath.getName.contains("="))
-    if (partDirs.isEmpty) forgetFlat(spark, ids, root, stage, key)
+    if (partDirs.isEmpty) forgetFlat(spark, ids, root, key)
     else {
       val levels = partitionTree(fs, root, partDirs.map(_.getPath))
       if (levels.isEmpty) {
@@ -397,14 +391,13 @@ object Versioning {
         // husks (one listing, taken above, answers both questions)
         if (rootListing.exists(st =>
             st.isFile && st.getPath.getName.endsWith(".parquet")))
-          forgetFlat(spark, ids, root, stage, key)
+          forgetFlat(spark, ids, root, key)
         else 0L
       } else levels.map(_._1).indexOf(key) match {
         case k if k >= 0 =>
           forgetKeyPartitioned(spark, ids, root, key, levels(k)._2)
         case _ =>
-          forgetPartitioned(spark, ids, root, stage, key,
-            levels.map(_._1))
+          forgetPartitioned(spark, ids, root, key, levels.map(_._1))
       }
     }
   }
@@ -469,16 +462,14 @@ object Versioning {
   /** The flat-table erase: stage ALL survivors, swap at the root. */
   private def forgetFlat(spark: org.apache.spark.sql.SparkSession,
       ids: DataFrame, root: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path, key: String): Long = {
+      key: String): Long = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tbl = spark.read.parquet(root.toString)
     require(tbl.columns.contains(key),
       s"forget: table $root has no '$key' column")
     val removed = tbl.join(ids, Seq(key), "left_semi").count()
     if (removed == 0L) return 0L
-    tbl.join(ids, Seq(key), "left_anti")
-      .write.mode("overwrite").parquet(stage.toString)
-    commitAndApply(fs, root, stage, Seq.empty)
+    ForgetStage.commitFlat(fs, root, tbl.join(ids, Seq(key), "left_anti"))
     removed
   }
 
@@ -495,8 +486,7 @@ object Versioning {
     * erasure.
     */
   private def forgetPartitioned(spark: org.apache.spark.sql.SparkSession,
-      ids: DataFrame, root: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path, key: String,
+      ids: DataFrame, root: org.apache.hadoop.fs.Path, key: String,
       levelCols: Seq[String]): Long = {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val tbl = spark.read.parquet(root.toString)
@@ -541,9 +531,10 @@ object Versioning {
       // column), exactly what the rewritten files must hold
       spark.read.parquet(s"$root/$d").join(ids, Seq(key), "left_anti")
         .write.mode("overwrite")
-        .parquet(new org.apache.hadoop.fs.Path(stage, d).toString)
+        .parquet(new org.apache.hadoop.fs.Path(ForgetStage.at(root), d)
+          .toString)
     }
-    commitAndApply(fs, root, stage, dirtyDirs)
+    ForgetStage.commitParts(fs, root, dirtyDirs)
     removed
   }
 
@@ -584,62 +575,5 @@ object Versioning {
         }
       }
     removed
-  }
-
-  /** Commit the staged survivors (dirty-parts manifest, then the
-    * stage-id marker — the commit point) and apply.
-    */
-  private def commitAndApply(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path, parts: Seq[String]): Unit = {
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_FORGET_PARTS"),
-      parts.mkString("\n"))
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID"),
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    applyForgetStage(fs, root, stage)
-  }
-
-  /** Replay-safe apply of a committed forget stage: per dirty
-    * directory (the `_GRAFT_FORGET_PARTS` manifest; empty = the flat
-    * root), staged survivor files move in under the run's uuid prefix
-    * FIRST, old data files are deleted second, the stage itself last
-    * — idempotent from any crash point (already-moved files are no
-    * longer staged, uuid-named files are never deleted, marker reads
-    * are stable). A dirty partition with NO staged survivors (fully
-    * dead) simply loses its old files.
-    */
-  private def applyForgetStage(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path): Unit = {
-    val uuid = graft.sources.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID")).get
-    val prefix = s"graftf-$uuid-"
-    val parts = graft.sources.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(stage, "_GRAFT_FORGET_PARTS"))
-      .map(_.split("\n").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    def applyOne(src: org.apache.hadoop.fs.Path,
-        dst: org.apache.hadoop.fs.Path): Unit = {
-      if (fs.exists(src))
-        fs.listStatus(src).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach { p =>
-            require(fs.rename(p,
-              new org.apache.hadoop.fs.Path(dst, prefix + p.getName)),
-              s"forget: could not move staged file $p into $dst")
-          }
-      if (fs.exists(dst))
-        fs.listStatus(dst).toSeq.map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet")
-            && !p.getName.startsWith(prefix))
-          .foreach { p => fs.delete(p, false); () }
-    }
-    if (parts.isEmpty) applyOne(stage, root)
-    else parts.foreach(d => applyOne(
-      new org.apache.hadoop.fs.Path(stage, d),
-      new org.apache.hadoop.fs.Path(root, d)))
-    fs.delete(stage, true)
-    ()
   }
 }

@@ -75,6 +75,8 @@ object CorpusIngest {
     graft.ml.ServedStore.CorpusTable.delete(spark, docIds, corpusPath)
 
   private[graft] val CorpusCompactStageDir = "_graft_corpus_compact_stage"
+  private val CorpusStage = graft.sources.StagedRewrite.SwapStage
+    .compaction(CorpusCompactStageDir, "compactCorpus: ", "ingest_batch=")
 
   /** Reclaim the corpus table's takedown debt: physically rewrite ONLY
     * the `ingest_batch=` partitions holding tombstoned rows, leaving
@@ -110,14 +112,9 @@ object CorpusIngest {
       corpusPath: String): Long = {
     val root = new org.apache.hadoop.fs.Path(corpusPath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$corpusPath/$CorpusCompactStageDir")
-    val sid = new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID")
     // finish a crashed committed apply, then fall through (post-crash
     // tombstone appends must still be honored by the normal pass)
-    if (graft.sources.Markers.read(fs, sid).isDefined)
-      applyCorpusStage(fs, root, stage)
-    fs.delete(stage, true)
+    CorpusStage.replay(fs, root)
     val store = graft.ml.ServedStore.CorpusTable
     val snapshot = store.snapshot(fs, corpusPath)
     if (snapshot.isEmpty) return 0L
@@ -129,13 +126,7 @@ object CorpusIngest {
         .parquet(committed: _*))
     // settled-only: pending tombstones (no corpus row yet) re-append
     // BEFORE the commit, in a fresh file outside the manifest
-    val pending = raw match {
-      case None => dead
-      case Some(r) =>
-        dead.join(r.select(col("doc_id")), Seq("doc_id"), "left_anti")
-          .localCheckpoint()
-    }
-    if (!pending.isEmpty) store.append(pending, corpusPath)
+    store.reappendPending(dead, raw, corpusPath, pin = true)
     // bounded driver action: the dirty-partition id list (takedowns
     // touch the partitions their docs landed in, not the whole table)
     val dirty: Seq[Long] = raw match {
@@ -146,65 +137,14 @@ object CorpusIngest {
         .select(col("ingest_batch")).distinct()
         .collect().toSeq.map(_.getLong(0))
     }
-    if (dirty.nonEmpty) {
+    if (dirty.nonEmpty)
       raw.get.filter(col("ingest_batch").isin(dirty: _*))
         .join(dead, Seq("doc_id"), "left_anti")
         .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(stage.toString)
-    } else {
-      fs.mkdirs(stage)
-      ()
-    }
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_PARTS"),
-      dirty.sorted.mkString("\n"))
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage,
-        StreamingNearDup.TombfilesMarker),
-      snapshot.map(_.toString).mkString("\n"))
-    graft.sources.Markers.write(fs, sid,
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    applyCorpusStage(fs, root, stage)
+        .parquet(CorpusStage.at(root).toString)
+    CorpusStage.commitParts(fs, root, dirty.sorted.map(_.toString),
+      snapshot)
     dirty.length.toLong
-  }
-
-  /** Replay-safe apply of a committed corpus-compaction stage: per
-    * dirty partition, staged survivor files move in under the run's
-    * uuid prefix FIRST, old data files are deleted second, markers are
-    * never touched; the manifested tombstone files drop LAST and the
-    * stage itself after them. Idempotent from any crash point —
-    * already-moved files are no longer staged, uuid-named files are
-    * never deleted, marker reads are stable.
-    */
-  private def applyCorpusStage(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path,
-      stage: org.apache.hadoop.fs.Path): Unit = {
-    val uuid = graft.sources.Markers.read(fs,
-      new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID")).get
-    val prefix = s"graftc-$uuid-"
-    val parts = graft.sources.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(stage, "_GRAFT_PARTS"))
-      .map(_.split("\n").toSeq.filter(_.nonEmpty)).getOrElse(Seq.empty)
-    parts.foreach { b =>
-      val sdir = new org.apache.hadoop.fs.Path(stage, s"ingest_batch=$b")
-      val pdir = new org.apache.hadoop.fs.Path(root, s"ingest_batch=$b")
-      if (fs.exists(sdir))
-        fs.listStatus(sdir).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach { p =>
-            require(fs.rename(p,
-              new org.apache.hadoop.fs.Path(pdir, prefix + p.getName)),
-              s"compactCorpus: could not move staged file $p into $pdir")
-          }
-      if (fs.exists(pdir))
-        fs.listStatus(pdir).toSeq.map(_.getPath)
-          .filter(p => p.getName.endsWith(".parquet")
-            && !p.getName.startsWith(prefix))
-          .foreach { p => fs.delete(p, false); () }
-    }
-    StreamingNearDup.deleteManifested(fs, stage)
-    fs.delete(stage, true)
-    ()
   }
 
   /** The committed `ingest_batch=` partition paths. */

@@ -207,11 +207,7 @@ object ErasureIngest {
     val root = new org.apache.hadoop.fs.Path(queuePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     if (!fs.exists(root)) return (0L, 0L)
-    if (breakStaleLock) {
-      fs.delete(new org.apache.hadoop.fs.Path(root,
-        graft.ml.Maintenance.MaintainingMarker), false)
-      ()
-    }
+    if (breakStaleLock) graft.ml.Maintenance.clearWriterLock(fs, root)
     graft.ml.Maintenance.withWriterLock(fs, root, "compactQueue") {
       val (queuedBatches, pendingBatches) = batchSets(spark, fs, root)
       val fully = (queuedBatches -- pendingBatches).toSeq.sorted

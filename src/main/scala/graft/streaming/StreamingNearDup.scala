@@ -188,11 +188,14 @@ object StreamingNearDup {
       (novel, bid, _) => onBatch(novel, bid))
 
   private[graft] val StoreCompactStageDir = "_graft_store_compact_stage"
-  private[graft] val TombfilesMarker = "_GRAFT_TOMBFILES"
+  private[graft] val TombfilesMarker =
+    graft.sources.StagedRewrite.TombfilesMarker
+  private val StoreStage =
+    graft.sources.StagedRewrite.SwapStage.compaction(StoreCompactStageDir)
 
   /** Reclaim the suppression store's takedown debt: physically rewrite
     * the store without tombstoned signatures, through the flat tiers'
-    * staged uuid-file-swap ([[graft.ml.Similarity.applyFlatStage]] —
+    * staged uuid-file-swap ([[graft.sources.StagedRewrite.SwapStage]] —
     * crash protocol and replay convergence inherited; store reads mid-
     * apply may see a signature row twice, which every consumer
     * tolerates: the banded check distincts and the own-rows probe is
@@ -215,17 +218,10 @@ object StreamingNearDup {
   def compactStore(spark: SparkSession, storePath: String): Long = {
     val root = new org.apache.hadoop.fs.Path(storePath)
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val stage = new org.apache.hadoop.fs.Path(
-      s"$storePath/$StoreCompactStageDir")
-    val sid = new org.apache.hadoop.fs.Path(stage, "_GRAFT_STAGE_ID")
     // finish a crashed committed apply first: replay the file swap and
     // drop exactly the manifested tombstone files, then fall through
     // (post-crash tombstone appends must still be honored)
-    if (graft.sources.Markers.read(fs, sid).isDefined) {
-      graft.ml.Similarity.applyFlatStage(fs, root, stage)
-      deleteManifested(fs, stage)
-    }
-    fs.delete(stage, true)
+    StoreStage.replay(fs, root)
     val store = graft.ml.ServedStore.NearDupStore
     val snapshot = store.snapshot(fs, storePath)
     if (snapshot.isEmpty) return 0L
@@ -233,37 +229,14 @@ object StreamingNearDup {
     val nDead = dead.count()
     // settled/pending split against the PRE-apply raw rows (the mask
     // hides exactly the rows this question is about)
-    val pending = dead.join(rawStore(spark, storePath)
-        .select(col("doc_id")), Seq("doc_id"), "left_anti")
-      .localCheckpoint()
-    if (!pending.isEmpty) store.append(pending, storePath)
+    store.reappendPending(dead, Some(rawStore(spark, storePath)),
+      storePath, pin = true)
     // survivors (fully masked — a tombstone appended after the
     // snapshot masks rows out of the stage AND keeps its file) stage
     // durably; the uuid marker is the commit point
-    readStore(spark, storePath).write.mode("overwrite")
-      .parquet(stage.toString)
-    graft.sources.Markers.write(fs,
-      new org.apache.hadoop.fs.Path(stage, TombfilesMarker),
-      snapshot.map(_.toString).mkString("\n"))
-    graft.sources.Markers.write(fs, sid,
-      java.util.UUID.randomUUID().toString.replace("-", ""))
-    graft.ml.Similarity.applyFlatStage(fs, root, stage)
-    deleteManifested(fs, stage)
-    fs.delete(stage, true)
+    StoreStage.commitFlat(fs, root, readStore(spark, storePath), snapshot)
     nDead
   }
-
-  /** Drop exactly the tombstone files a committed stage manifested —
-    * this store's and the corpus table's compaction stages alike.
-    */
-  private[streaming] def deleteManifested(
-      fs: org.apache.hadoop.fs.FileSystem,
-      stage: org.apache.hadoop.fs.Path): Unit =
-    graft.sources.Markers.read(fs,
-        new org.apache.hadoop.fs.Path(stage, TombfilesMarker))
-      .foreach(m => graft.ml.ServedStore.NearDupStore.reclaim(fs,
-        m.split("\n").toSeq.filter(_.nonEmpty)
-          .map(new org.apache.hadoop.fs.Path(_))))
 
   /** [[processBatch]] variant whose callback also receives the batch's
     * content fingerprint — so callers that need the sig themselves

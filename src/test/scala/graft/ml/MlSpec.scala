@@ -1635,14 +1635,14 @@ class MlSpec extends SparkSpec {
       assert(files() === before,
         "compaction rewrote a duplicate-free build")
       // writer lock: appends refuse while the marker exists
-      val marker = new java.io.File(path, Dedup.SubstrCompactingMarker)
+      val marker = new java.io.File(path, Maintenance.MaintainingMarker)
       assert(marker.createNewFile())
-      val ex = intercept[IllegalArgumentException] {
+      val ex = intercept[IllegalStateException] {
         Dedup.appendSubstrIndex(spark,
           docs.filter(col("doc_id") >= n / 2 && col("doc_id") < n / 2 + 5),
           path)
       }
-      assert(ex.getMessage.contains(Dedup.SubstrCompactingMarker))
+      assert(ex.getMessage.contains(Maintenance.MaintainingMarker))
       assert(marker.delete())
       Dedup.appendSubstrIndex(spark,
         docs.filter(col("doc_id") >= n / 2 && col("doc_id") < n / 2 + 5),
@@ -2959,7 +2959,7 @@ class MlSpec extends SparkSpec {
         .filter(col("count") > 1).count() === 0L,
         "duplicate postings survived compaction")
       assert(!new java.io.File(path,
-          Dedup.SubstrCompactingMarker).exists(),
+          Maintenance.MaintainingMarker).exists(),
         "writer-lock marker survived a completed compaction")
       val after = Dedup.exactSubstrIncrement(spark,
         docs.filter(col("doc_id") >= t2), path).collect().toSeq
