@@ -1239,19 +1239,7 @@ object Dedup {
   private[graft] def appendSubstrIndexAt(
       spark: org.apache.spark.sql.SparkSession, newDocs: DataFrame,
       path: String, maxIndexed: Long): Unit = {
-    // the unified maintenance lock guards the same hazard from the
-    // maintainIndex side (r15 verdict item 4)
-    graft.ml.Maintenance.refuseIfMaintaining(spark, path,
-      "appendSubstrIndex")
-    // a COMMITTED but un-applied compaction stage is as dangerous as
-    // a live compaction: the next compactSubstrIndex entry REPLAYS
-    // the stage over its dirty buckets, silently overwriting any rows
-    // appended now (the lock alone cannot cover this — a failed
-    // compaction releases it on the way out, stage intact)
-    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
-      new org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration),
-      path, "appendSubstrIndex")
+    ServedStore.requireAppendable(spark, path, "appendSubstrIndex")
     val (k, nBuckets) = substrIndexParams(spark, path)
     requireMonotoneBatch(newDocs, maxIndexed, "appendSubstrIndex")
     posShingleHashes(newDocs, k)

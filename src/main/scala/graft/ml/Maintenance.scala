@@ -1,7 +1,8 @@
 package graft.ml
 
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.streaming.StreamingQuery
 
 /** Maintenance POLICY for the standing indexes (r14 verdict item 5).
   * Every index family is a [[ServedStore]] — its tombstone sibling,
@@ -24,11 +25,14 @@ import org.apache.spark.sql.functions._
   * writer lock for the sweep's duration ([[withWriterLock]], the one
   * lock acquisition every single-writer op shares — the public
   * [[graft.ml.Dedup.compactSubstrIndex]] included) — and every ingest
-  * append ([[graft.streaming
-  * .BatchCommit]], [[graft.streaming.StreamingNearDup]], the substr
-  * append) and tombstone delete REFUSES loudly while it exists, so a
-  * sweep racing a live writer surfaces as an error on the writer, not
-  * silent loss. A marker left by a CRASHED sweep keeps writers
+  * append (the streamed batches through [[graft.streaming
+  * .BatchCommit]], [[graft.streaming.StreamingNearDup]], and the four
+  * manual base appends [[Similarity.appendIvfIndex]],
+  * [[Similarity.appendIvfPqIndex]], [[Retrieval.appendBm25Index]] and
+  * [[Dedup.appendSubstrIndex]] through
+  * [[ServedStore.requireAppendable]]) and tombstone delete REFUSES
+  * loudly while it exists, so a sweep racing a live writer surfaces
+  * as an error on the writer, not silent loss. A marker left by a CRASHED sweep keeps writers
   * blocked (fail-closed) until `maintainIndex(breakStaleLock = true)`
   * re-enters; the residual check-to-commit window is the documented
   * limit of directory-of-parquet tables. The in-stream maintenance
@@ -146,15 +150,8 @@ object Maintenance {
       if (tomb.isEmpty) 0L else store.idsIn(spark, tomb).count()
     val sib = new org.apache.hadoop.fs.Path(
       path + Similarity.StreamSiblingSuffix)
-    val backlog =
-      if (!fs.exists(sib)) 0L
-      else fs.listStatus(sib).count { st =>
-        st.isDirectory && st.getPath.getName.startsWith("ingest_batch=") &&
-          fs.exists(new org.apache.hadoop.fs.Path(st.getPath,
-            "_SUCCESS")) &&
-          !fs.exists(new org.apache.hadoop.fs.Path(st.getPath,
-            Similarity.FoldedMarker))
-      }.toLong
+    val backlog = graft.streaming.BatchCommit.committed(fs, sib)
+      .count(!graft.streaming.BatchCommit.isFolded(fs, _)).toLong
     val multi =
       if (store.partitionPrefix.isEmpty) 0L
       else fs.listStatus(root).count { st =>
@@ -258,13 +255,14 @@ object Maintenance {
     * streamed takedowns degraded every serve behind an ever-growing
     * mask unless an operator remembered the sweep. The long-running
     * ingest streams (CorpusIngest / VectorIngest / Bm25Ingest /
-    * MediaIngest) call this at their foreachBatch TAILS every
-    * `every` batches (0 = off, the default): measurement is one cheap
-    * metadata pass, and a sweep that fires runs INSIDE the batch
-    * callback — serialized with the stream's own writes, so the
-    * writer-lock discipline can never trip against the very stream
-    * that invoked it. Multiple targets (the corpus ingest maintains
-    * its corpus table AND its near-dup store) sweep sequentially.
+    * MediaIngest) call this at their foreachBatch TAILS
+    * ([[startMaintained]]) every `every` batches (0 = off, the
+    * default): measurement is one cheap metadata pass, and a sweep that
+    * fires runs INSIDE the batch callback — serialized with the
+    * stream's own writes, so the writer-lock discipline can never trip
+    * against the very stream that invoked it. Multiple targets (the
+    * corpus ingest maintains its corpus table AND its near-dup store)
+    * sweep sequentially.
     */
   def maintainEveryN(spark: SparkSession, batchId: Long, every: Int,
       thresholds: Thresholds, targets: Seq[(String, String)]): Unit =
@@ -273,4 +271,23 @@ object Maintenance {
         maintainIndex(spark, path, family, thresholds)
         ()
       }
+
+  /** Start a maintained ingest stream: each micro-batch runs `body`,
+    * then the sweep hook. `maintainEvery` (0 = off) wires the
+    * every-N-batches auto-maintenance hook ([[maintainEveryN]]) over
+    * `targets` into the foreachBatch tail — serialized with this
+    * stream's own writes, so the sweep never races them.
+    */
+  private[graft] def startMaintained(stream: DataFrame,
+      checkpoint: String, maintainEvery: Int, thresholds: Thresholds,
+      targets: Seq[(String, String)])(body: (DataFrame, Long) => Unit)
+      : StreamingQuery =
+    stream.writeStream
+      .option("checkpointLocation", checkpoint)
+      .foreachBatch { (batch: DataFrame, batchId: Long) =>
+        body(batch, batchId)
+        maintainEveryN(batch.sparkSession, batchId, maintainEvery,
+          thresholds, targets)
+      }
+      .start()
 }

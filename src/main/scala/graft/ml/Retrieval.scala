@@ -370,9 +370,10 @@ object Retrieval {
   /** Fold the streamed-appends sibling INTO the base BM25 index — the
     * lexical twin of [[Similarity.foldStreamIntoIvfIndex]], with the
     * same crash contract: pending committed `ingest_batch=` partitions
-    * are HIDDEN first (the [[Similarity.FoldedMarker]] visibility
-    * flip, so postings are never served from base and stream at
-    * once), their postings move into base `bkt=` directories through
+    * are HIDDEN first (the
+    * [[graft.streaming.BatchCommit.FoldedMarker]] visibility flip, so
+    * postings are never served from base and stream at once), their
+    * postings move into base `bkt=` directories through
     * the durable-stage protocol with a DISTINCT union (refolds
     * converge), their doc lengths merge into the doc-length table
     * through the live→bak/tmp→live swap (distinct again), and the
@@ -426,7 +427,7 @@ object Retrieval {
       swapInDocsTmp(fs, docsLive, docsBak, docsTmp)
     }
     // drop the data LAST, keep the stub (the replay ledger)
-    Similarity.dropFoldedData(fs, pending)
+    graft.streaming.BatchCommit.dropToStub(fs, pending)
     pending.size.toLong
   }
 
@@ -554,10 +555,7 @@ object Retrieval {
     */
   def appendBm25Index(spark: org.apache.spark.sql.SparkSession,
       newDocs: DataFrame, path: String): Unit = {
-    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
-      new org.apache.hadoop.fs.Path(path).getFileSystem(
-        spark.sparkContext.hadoopConfiguration),
-      path, "appendBm25Index")
+    ServedStore.requireAppendable(spark, path, "appendBm25Index")
     val nBuckets = spark.read.parquet(s"$path/$StatsDir")
       .head().getAs[Int]("n_buckets")
     val existing = spark.read.parquet(s"$path/$DocsDir")

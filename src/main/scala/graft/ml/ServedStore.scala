@@ -166,6 +166,23 @@ private[graft] final case class ServedStore private (
 private[graft] object ServedStore {
   import graft.streaming.{CorpusIngest, StreamingNearDup}
 
+  /** The guard every manual BASE append runs before it writes: refuse
+    * while a maintenance sweep holds `root` (its fold/compact rewrites
+    * the very partitions the append would land in, through a dynamic
+    * partition overwrite that would silently drop the appended rows),
+    * then refuse while a COMMITTED but un-applied bucket stage exists
+    * (the next maintenance entry replays it over its dirty partitions
+    * — the lock alone cannot cover this: a failed compaction releases
+    * it on the way out, stage intact).
+    */
+  def requireAppendable(spark: SparkSession, root: String,
+      op: String): Unit = {
+    Maintenance.refuseIfMaintaining(spark, root, op)
+    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
+      new Path(root).getFileSystem(spark.sparkContext.hadoopConfiguration),
+      root, op)
+  }
+
   val Bm25 = ServedStore("bm25", "doc_id", Retrieval.DeletedDir, "bkt=",
     "deleteBm25Docs",
     Some((s, p) => Retrieval.foldStreamIntoBm25Index(s, p)),

@@ -5,6 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.{Column, DataFrame}
 
 import graft.functions.VectorFunctions.dot
+import graft.streaming.BatchCommit
 
 /** Approximate-nearest-neighbor search over an embedding column
   * (`embedding: array<float>`).
@@ -744,9 +745,9 @@ object Similarity {
     * staged full rewrite (cheap by construction: 8 bytes/vector at
     * dim 64). Crash contract, file-swap edition of the IVF stage
     * protocol: survivors stage durably under [[BinCompactStageDir]]
-    * (its `_SUCCESS` is the commit point) with a per-run uuid
-    * recorded in the stage; the apply renames staged files into the
-    * root under `graftc-<uuid>-` names and deletes only root data
+    * with a per-run uuid recorded in the stage's `_GRAFT_STAGE_ID`
+    * marker (the commit point); the apply renames staged files into
+    * the root under `graftc-<uuid>-` names and deletes only root data
     * files NOT carrying this uuid — so a replay after a mid-apply
     * crash never deletes the files it already moved, and always
     * converges on exactly the staged survivor set. Tombstone files
@@ -807,8 +808,8 @@ object Similarity {
     * converge — a batch whose rows already reached the base is
     * absorbed, never doubled), uuid-swap the stage in through
     * the swap stage's reader-safe apply, THEN flip the
-    * [[FoldedMarker]]s and drop the batch data, leaving the data-less
-    * replay-ledger stubs. Move-first (the REVERSE of the IVF/BM25
+    * [[BatchCommit.FoldedMarker]]s and drop the batch data, leaving
+    * the data-less replay-ledger stubs. Move-first (the REVERSE of the IVF/BM25
     * claim order) is what the serving read's vec_id dedup buys: a
     * concurrent reader inside the fold window sees streamed rows from
     * base AND stream — duplicates, deduped — never a gap, and a
@@ -841,7 +842,8 @@ object Similarity {
     // finish a crashed apply from its committed stage first
     stage.replay(fs, root)
     val sib = new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)
-    val pending = listPendingBatches(fs, sib)
+    val pending = BatchCommit.committed(fs, sib)
+      .filter(BatchCommit.holdsData(fs, _))
     if (pending.isEmpty) return 0L
     val streamed = pending
       .map(p => spark.read.parquet(p.toString))
@@ -853,8 +855,8 @@ object Similarity {
       .dropDuplicates(idCol))
     // rows are in the base now — ONLY now stop serving the stream
     // copies (they'd just dedup away) and drop the batch data
-    markBatchesFolded(fs, pending)
-    dropFoldedData(fs, pending)
+    BatchCommit.markFolded(fs, pending)
+    BatchCommit.dropToStub(fs, pending)
     pending.size.toLong
   }
 
@@ -1056,7 +1058,7 @@ object Similarity {
     require(refine >= k, "refine depth must be >= k")
     require(maxHamming >= 0, "maxHamming must be non-negative")
     require(budgetCandidates > 0L, "budgetCandidates must be positive")
-    require(!streamSiblingHoldsData(
+    require(!BatchCommit.anyHoldsData(
         new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration),
         new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
@@ -1205,7 +1207,7 @@ object Similarity {
     // mining only the base would silently miss every pair involving a
     // streamed vector — refuse like compactBinaryIndex/
     // writeBinaryIndex do (the r12 review finding): fold first
-    require(!streamSiblingHoldsData(
+    require(!BatchCommit.anyHoldsData(
         new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration),
         new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
@@ -1276,7 +1278,7 @@ object Similarity {
       "the routed form needs a positive bandOccupancyCap to engage")
     require(budgetCandidatesPerVec > 0L,
       "budgetCandidatesPerVec must be positive")
-    require(!streamSiblingHoldsData(
+    require(!BatchCommit.anyHoldsData(
         new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration),
         new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
@@ -1681,7 +1683,7 @@ object Similarity {
       fs: org.apache.hadoop.fs.FileSystem, path: String,
       what: String): Unit = {
     val root = new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)
-    require(!streamSiblingHoldsData(fs, root),
+    require(!BatchCommit.anyHoldsData(fs, root),
       s"$what: streamed-appends sibling $root holds data from a " +
         "previous index generation — fold it into the old base or " +
         "delete it explicitly before rebuilding")
@@ -1733,10 +1735,7 @@ object Similarity {
     */
   def appendIvfIndex(spark: org.apache.spark.sql.SparkSession,
       newEmbeddings: DataFrame, path: String): Unit = {
-    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "appendIvfIndex")
+    ServedStore.requireAppendable(spark, path, "appendIvfIndex")
     requireFreshIds(spark, newEmbeddings, path, "appendIvfIndex")
     val cents = spark.read.parquet(s"$path/$CentroidsDir")
     assignCells(newEmbeddings, cents)
@@ -1783,48 +1782,6 @@ object Similarity {
     * could resurface from streamed partitions.
     */
   private[graft] val StreamSiblingSuffix = "_stream"
-
-  /** Marker a fold places INSIDE a streamed batch partition the moment
-    * it takes ownership: serving skips marked partitions (their rows
-    * are, or are about to be, in the base — reading both would serve
-    * duplicates), while the partition's `_SUCCESS` + `_GRAFT_BATCH_SIG`
-    * stay behind forever as the replay ledger, so
-    * [[graft.streaming.BatchCommit]] keeps absorbing genuine replays
-    * and refusing recycled batch ids exactly as before the fold.
-    */
-  private[graft] val FoldedMarker = "_GRAFT_FOLDED"
-
-  /** True iff `dir` (recursively) holds at least one parquet data
-    * file — how a fold distinguishes a pending streamed batch from an
-    * already-folded stub, and how the compactors decide whether a
-    * stream sibling still guards un-folded rows.
-    */
-  private[graft] def hasParquetData(fs: org.apache.hadoop.fs.FileSystem,
-      dir: org.apache.hadoop.fs.Path): Boolean = {
-    val it = fs.listFiles(dir, true)
-    var found = false
-    while (!found && it.hasNext)
-      found = it.next().getPath.getName.endsWith(".parquet")
-    found
-  }
-
-  /** True iff the streamed-appends sibling still holds UN-FOLDED data:
-    * any `ingest_batch=` partition (committed or not — an uncommitted
-    * one may yet be committed by a stream replay) with parquet files
-    * inside. This — not bare directory existence — is the compaction
-    * refusal condition: once [[foldStreamIntoIvfIndex]] (or the BM25
-    * fold) has drained every batch to a stub, dropping tombstones can
-    * no longer un-mask streamed rows, and the sibling's remaining
-    * stubs are just the replay ledger.
-    */
-  private[graft] def streamSiblingHoldsData(
-      fs: org.apache.hadoop.fs.FileSystem, root: org.apache.hadoop.fs.Path)
-      : Boolean =
-    fs.exists(root) && fs.listStatus(root).exists { st =>
-      st.isDirectory &&
-        st.getPath.getName.startsWith("ingest_batch=") &&
-        hasParquetData(fs, st.getPath)
-    }
 
   /** Soft-delete vectors from a persisted IVF or IVF-PQ index: the
     * ids land in an underscore-prefixed tombstone table beside the
@@ -1893,65 +1850,18 @@ object Similarity {
   /** The fold entry's shared claim step: list the stream sibling's
     * COMMITTED batch partitions that still hold data (folded stubs
     * are data-less), then flip each out of serving with the
-    * [[FoldedMarker]] before any row moves — both folds share this so
-    * the hide-first crash contract lives once.
+    * [[BatchCommit.FoldedMarker]] before any row moves — both folds
+    * share this so the hide-first crash contract lives once.
     */
   private[ml] def claimPendingBatches(
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path)
       : Seq[org.apache.hadoop.fs.Path] = {
-    val pending = listPendingBatches(fs, root)
-    markBatchesFolded(fs, pending)
+    val pending = BatchCommit.committed(fs, root)
+      .filter(BatchCommit.holdsData(fs, _))
+    BatchCommit.markFolded(fs, pending)
     pending
   }
-
-  /** The claim's LIST half without the marker flip — for folds whose
-    * serving read dedups (the binary tier): there, rows may be
-    * visible in base AND stream simultaneously, so the fold can move
-    * first and hide after, and serving never loses a row inside the
-    * fold window (hide-first folds — IVF/BM25, whose reads do NOT
-    * dedup — would serve duplicates instead and must keep the claim
-    * order).
-    */
-  private[ml] def listPendingBatches(
-      fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] = {
-    if (!fs.exists(root)) return Seq.empty
-    fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest_batch="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath)
-      .filter(p => hasParquetData(fs, p))
-  }
-
-  private[ml] def markBatchesFolded(
-      fs: org.apache.hadoop.fs.FileSystem,
-      batches: Seq[org.apache.hadoop.fs.Path]): Unit =
-    batches.foreach { p =>
-      val m = new org.apache.hadoop.fs.Path(p, FoldedMarker)
-      if (!fs.exists(m)) fs.create(m, true).close()
-    }
-
-  /** Drop the folded batches' data, keeping each partition's
-    * `_SUCCESS`, `_GRAFT_BATCH_SIG` and [[FoldedMarker]] — the
-    * data-less stub that keeps the BatchCommit replay ledger alive.
-    * Every fold calls this LAST, once the rows are in the base.
-    */
-  private[ml] def dropFoldedData(fs: org.apache.hadoop.fs.FileSystem,
-      batches: Seq[org.apache.hadoop.fs.Path]): Unit =
-    batches.foreach { p =>
-      fs.listStatus(p).foreach { st =>
-        val n = st.getPath.getName
-        if (n != "_SUCCESS" && n != "_GRAFT_BATCH_SIG"
-            && n != FoldedMarker) {
-          fs.delete(st.getPath, true)
-          ()
-        }
-      }
-    }
 
   /** The compactors' refusal while the streamed-appends sibling holds
     * un-folded data: the tombstones also mask streamed rows, which a
@@ -1961,7 +1871,7 @@ object Similarity {
     */
   private[ml] def requireStreamFolded(fs: org.apache.hadoop.fs.FileSystem,
       path: String, what: String, foldOp: String): Unit =
-    require(!streamSiblingHoldsData(fs,
+    require(!BatchCommit.anyHoldsData(fs,
         new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
       s"$what: streamed-appends sibling " +
         s"$path$StreamSiblingSuffix holds un-folded data — compacting " +
@@ -1982,22 +1892,22 @@ object Similarity {
     * sibling holds no data) reclaims them physically.
     *
     * CRASH CONTRACT: each pending partition is first marked
-    * [[FoldedMarker]] — an atomic visibility flip that makes serving
-    * skip it, so folded rows are NEVER visible twice (base and stream
-    * simultaneously); from the mark until the fold completes those
-    * rows are temporarily absent from serving, the honest maintenance
-    * gap, and any crash leaves the marked-but-still-data partitions as
-    * a durable worklist the next fold entry resumes. The stage write
-    * unions base rows of the touched cells with the batch rows
-    * DISTINCT, so a refold of rows a crashed run already applied
-    * converges instead of duplicating. Batch data is deleted LAST,
-    * after the apply — every earlier crash point leaves either the
-    * old state (unmarked), the hidden state (marked, data intact), or
-    * the applied state (marked, data intact, rows also in base —
-    * distinct absorbs). Single-writer maintenance op, concurrent with
-    * the append stream: folding touches only the entry-snapshot
-    * partitions; batches committed mid-fold stay served from the
-    * sibling. Returns the number of partitions folded.
+    * [[BatchCommit.FoldedMarker]] — an atomic visibility flip that
+    * makes serving skip it, so folded rows are NEVER visible twice
+    * (base and stream simultaneously); from the mark until the fold
+    * completes those rows are temporarily absent from serving, the
+    * honest maintenance gap, and any crash leaves the
+    * marked-but-still-data partitions as a durable worklist the next
+    * fold entry resumes. The stage write unions base rows of the
+    * touched cells with the batch rows DISTINCT, so a refold of rows a
+    * crashed run already applied converges instead of duplicating.
+    * Batch data is deleted LAST, after the apply — every earlier crash
+    * point leaves either the old state (unmarked), the hidden state
+    * (marked, data intact), or the applied state (marked, data intact,
+    * rows also in base — distinct absorbs). Single-writer maintenance
+    * op, concurrent with the append stream: folding touches only the
+    * entry-snapshot partitions; batches committed mid-fold stay served
+    * from the sibling. Returns the number of partitions folded.
     */
   def foldStreamIntoIvfIndex(spark: org.apache.spark.sql.SparkSession,
       path: String): Long = {
@@ -2015,7 +1925,7 @@ object Similarity {
     foldIntoBuckets(spark, path, "cell", pending
       .map(p => spark.read.parquet(p.toString)).reduce(_.unionByName(_)))
     // drop the data LAST, keep the stub (the replay ledger)
-    dropFoldedData(fs, pending)
+    BatchCommit.dropToStub(fs, pending)
     pending.size.toLong
   }
 
@@ -2410,10 +2320,7 @@ object Similarity {
     */
   def appendIvfPqIndex(spark: org.apache.spark.sql.SparkSession,
       newEmbeddings: DataFrame, path: String): Unit = {
-    graft.sources.StagedRewrite.requireNoCommittedBucketStage(
-      new org.apache.hadoop.fs.Path(path)
-        .getFileSystem(spark.sparkContext.hadoopConfiguration),
-      path, "appendIvfPqIndex")
+    ServedStore.requireAppendable(spark, path, "appendIvfPqIndex")
     requireFreshIds(spark, newEmbeddings, path, "appendIvfPqIndex")
     val cents = spark.read.parquet(s"$path/$CentroidsDir")
     val codebook = spark.read.parquet(s"$path/$PqCodebookDir")
@@ -2567,7 +2474,7 @@ object Similarity {
     // sibling holds un-folded data, or every streamed vector would be
     // silently invisible to the routed serve (the binaryTopKServedAuto
     // refusal, the session review's top finding on this very router)
-    require(!streamSiblingHoldsData(
+    require(!BatchCommit.anyHoldsData(
         new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration),
         new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),
@@ -2883,7 +2790,7 @@ object Similarity {
       "the routed form needs a positive cellCandidateCap to engage")
     require(budgetCandidatesPerQuery > 0L,
       "budgetCandidatesPerQuery must be positive")
-    require(!streamSiblingHoldsData(
+    require(!BatchCommit.anyHoldsData(
         new org.apache.hadoop.fs.Path(path).getFileSystem(
           spark.sparkContext.hadoopConfiguration),
         new org.apache.hadoop.fs.Path(path + StreamSiblingSuffix)),

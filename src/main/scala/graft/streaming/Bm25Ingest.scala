@@ -19,11 +19,12 @@ import graft.ml.Retrieval
   *
   * Delivery is the [[BatchCommit]] at-most-once discipline (partition
   * dir per batch id, content-fingerprint marker, recycled-id
-  * refusal). A BM25 batch writes TWO tables (postings + doc lengths),
-  * so the partition's `_SUCCESS` is created MANUALLY after both land
-  * — relying on the posting write's own committer marker would open a
-  * crash window where a partition looks committed with its doc
-  * lengths missing, silently deflating avgdl for every later query.
+  * refusal). A BM25 batch writes TWO tables (postings + doc lengths)
+  * under its partition, and the partition's `_SUCCESS` lands only
+  * after the whole batch body returned — a marker after the postings
+  * alone would open a crash window where a partition looks committed
+  * with its doc lengths missing, silently deflating avgdl for every
+  * later query.
   *
   * Scale: per-trigger work is one tokenize + two aggregates over the
   * batch plus a partitioned write — O(batch), never O(index). Stream
@@ -42,12 +43,8 @@ object Bm25Ingest {
     indexPath + graft.ml.Similarity.StreamSiblingSuffix
 
   /** Content fingerprint of a document batch (order-insensitive). */
-  def batchSig(batch: DataFrame): Long = {
-    val r = batch
-      .agg(coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L))
-        .as("x"), count(lit(1)).as("n")).head()
-    r.getLong(0) * 31L + r.getLong(1)
-  }
+  def batchSig(batch: DataFrame): Long =
+    BatchCommit.fingerprint(batch, col("doc_id"), col("text"))._1
 
   /** Pure per-batch body (testable without a streaming runtime). */
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String)
@@ -63,40 +60,27 @@ object Bm25Ingest {
       val (tf, dl, _) = Retrieval.corpusStats(batch)
       // postings under part/postings, doc lengths under part/docs:
       // each write owns its own subdirectory (a direct overwrite-write
-      // into `part` would truncate the sibling), and the partition's
-      // _SUCCESS is created only after BOTH landed
+      // into `part` would truncate the sibling)
       tf.withColumn("bkt",
           pmod(xxhash64(col("term")), lit(nBuckets.toLong)))
         .write.mode("overwrite").partitionBy("bkt")
         .parquet(s"$part/postings")
       dl.write.mode("overwrite").parquet(s"$part/docs")
-      val p = new org.apache.hadoop.fs.Path(part, "_SUCCESS")
-      val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      fs.create(p, true).close()
     }
   }
 
   /** Wire the stream: micro-batches of (doc_id, text) append to the
-    * served index's stream table.
-    */
-  /** `maintainEvery` (0 = off) wires the every-N-batches
-    * auto-maintenance hook ([[graft.ml.Maintenance.maintainEveryN]],
-    * r15 verdict item 6) into the foreachBatch tail — serialized with
-    * this stream's own writes, so the sweep never races them.
+    * served index's stream table, with the every-`maintainEvery`
+    * batches sweep of [[graft.ml.Maintenance.startMaintained]].
     */
   def start(streamingDocs: DataFrame, indexPath: String,
       checkpoint: String, maintainEvery: Int = 0,
       maintainThresholds: graft.ml.Maintenance.Thresholds =
         graft.ml.Maintenance.Thresholds()): StreamingQuery =
-    streamingDocs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexPath)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(indexPath -> "bm25"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(streamingDocs, checkpoint,
+      maintainEvery, maintainThresholds, Seq(indexPath -> "bm25")) {
+      (batch, batchId) => ingestBatch(batch, batchId, indexPath)
+    }
 
   /** Wire a DELETE stream: each micro-batch of (doc_id) rows lands in
     * the base index's tombstone table
@@ -117,9 +101,9 @@ object Bm25Ingest {
 
   /** Serve top-k from base ∪ committed streamed appends (term-bucket
     * pruned on every root); falls back to the base alone before any
-    * batch commits. Committed ⇔ the partition's manual `_SUCCESS` —
-    * reading uncommitted dirs would serve a partial batch (see
-    * [[VectorIngest]]'s servePaths note).
+    * batch commits. Committed ⇔ the partition's `_SUCCESS`, written
+    * after both tables landed — reading uncommitted dirs would serve a
+    * partial batch ([[BatchCommit.committed]]).
     */
   def queryServed(spark: SparkSession, indexPath: String,
       queries: DataFrame, k: Int, k1: Double = 1.2, b: Double = 0.75,
@@ -127,28 +111,16 @@ object Bm25Ingest {
     val nBuckets = spark.read
       .parquet(s"$indexPath/${Retrieval.StatsDir}")
       .head().getAs[Int]("n_buckets")
-    val committed = committedParts(spark, indexPath)
+    val sp = new org.apache.hadoop.fs.Path(streamPath(indexPath))
+    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    // folded partitions serve from the base now (see
+    // VectorIngest.servePaths)
+    val committed = BatchCommit.committed(fs, sp)
+      .filterNot(BatchCommit.isFolded(fs, _))
     Retrieval.queryBm25IndexFrom(spark, nBuckets,
       indexPath +: committed.map(p => s"$p/postings"),
       Retrieval.docsDirFor(spark, indexPath) +:
         committed.map(p => s"$p/docs"),
       queries, k, k1, b, maxDf)
-  }
-
-  private def committedParts(spark: SparkSession, indexPath: String)
-      : Seq[String] = {
-    val sp = new org.apache.hadoop.fs.Path(streamPath(indexPath))
-    val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sp)) Nil
-    else fs.listStatus(sp).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest_batch="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      // folded partitions serve from the base now (see
-      // VectorIngest.servePaths)
-      .filter(st => !fs.exists(new org.apache.hadoop.fs.Path(
-        st.getPath, graft.ml.Similarity.FoldedMarker)))
-      .map(_.getPath.toString)
   }
 }

@@ -76,7 +76,8 @@ object CorpusIngest {
 
   private[graft] val CorpusCompactStageDir = "_graft_corpus_compact_stage"
   private val CorpusStage = graft.sources.StagedRewrite.SwapStage
-    .compaction(CorpusCompactStageDir, "compactCorpus: ", "ingest_batch=")
+    .compaction(CorpusCompactStageDir, "compactCorpus: ",
+      BatchCommit.PartitionPrefix)
 
   /** Reclaim the corpus table's takedown debt: physically rewrite ONLY
     * the `ingest_batch=` partitions holding tombstoned rows, leaving
@@ -119,7 +120,7 @@ object CorpusIngest {
     val snapshot = store.snapshot(fs, corpusPath)
     if (snapshot.isEmpty) return 0L
     val dead = store.idsIn(spark, snapshot).localCheckpoint()
-    val committed = committedPartitions(fs, root)
+    val committed = BatchCommit.committed(fs, root).map(_.toString)
     val raw =
       if (committed.isEmpty) None
       else Some(spark.read.option("basePath", corpusPath)
@@ -147,22 +148,12 @@ object CorpusIngest {
     dirty.length.toLong
   }
 
-  /** The committed `ingest_batch=` partition paths. */
-  private def committedPartitions(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): Seq[String] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest_batch="))
-      .filter(st => fs.exists(
-        new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-      .map(_.getPath.toString)
-
   /** Read the corpus table as a consumer must: COMMITTED partitions
-    * only (`_SUCCESS` — the same rule [[graft.streaming.VectorIngest
-    * .servePaths]] applies to index stream tables: a write that died
-    * during job commit leaves data files with no marker, and reading
-    * them would serve a partial batch until its replay), with
+    * only ([[BatchCommit.committed]] — the same rule
+    * [[graft.streaming.VectorIngest.servePaths]] applies to index
+    * stream tables: a write that died during job commit leaves data
+    * files with no marker, and reading them would serve a partial
+    * batch until its replay), with
     * [[deleteFromCorpus]] tombstones masked. Loud when nothing is
     * committed yet — an empty corpus read has no schema to synthesize
     * and silently returning one would hide a mis-pointed path.
@@ -173,7 +164,7 @@ object CorpusIngest {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     require(fs.exists(root),
       s"readCorpus: no corpus table at $corpusPath")
-    val committed = committedPartitions(fs, root)
+    val committed = BatchCommit.committed(fs, root).map(_.toString)
     require(committed.nonEmpty,
       s"readCorpus: no committed ingest_batch partitions at " +
         s"$corpusPath — nothing has been ingested (or the path is " +
@@ -183,10 +174,10 @@ object CorpusIngest {
     graft.ml.ServedStore.CorpusTable.mask(spark, Seq(corpusPath), rows)
   }
 
-  /** `maintainEvery` (0 = off) wires the every-N-batches
-    * auto-maintenance hook ([[graft.ml.Maintenance.maintainEveryN]],
-    * r15 verdict item 6) into the foreachBatch tail — serialized with
-    * this stream's own writes, so the sweep never races them.
+  /** Wire the stream: micro-batches of (doc_id, text) run
+    * [[ingestBatch]], with the every-`maintainEvery` batches sweep of
+    * [[graft.ml.Maintenance.startMaintained]] over the corpus table
+    * and the near-dup store.
     */
   def start(streamingDocs: DataFrame, corpusPath: String,
       storePath: String, checkpoint: String,
@@ -195,16 +186,15 @@ object CorpusIngest {
       maintainThresholds: graft.ml.Maintenance.Thresholds =
         graft.ml.Maintenance.Thresholds())
       : StreamingQuery =
-    streamingDocs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, corpusPath, storePath,
-          minChars, lang, maxHamming)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(corpusPath -> "corpus", storePath -> "neardup_store"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(streamingDocs, checkpoint,
+      maintainEvery, maintainThresholds, maintained(corpusPath, storePath)) {
+      (batch, batchId) => ingestBatch(batch, batchId, corpusPath,
+        storePath, minChars, lang, maxHamming)
+    }
+
+  /** The two stores a corpus ingest stream maintains. */
+  private def maintained(corpusPath: String, storePath: String) =
+    Seq(corpusPath -> "corpus", storePath -> "neardup_store")
 
   /** The crawl-format FRONT DOOR: a directory of raw JSONL files (the
     * wire format crawls actually deliver) streams through
@@ -256,21 +246,17 @@ object CorpusIngest {
       maintainThresholds: graft.ml.Maintenance.Thresholds =
         graft.ml.Maintenance.Thresholds())
       : StreamingQuery =
-    graft.sources.WarcCorpus.readStreamQuarantined(spark, feedDir)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.WarcCorpus.rejects(batch)
-          .write.mode("overwrite")
-          .parquet(s"$rejectsPath/ingest_batch=$batchId")
-        ingestBatch(graft.sources.WarcCorpus.goodRecords(batch)
-            .select(docIdOf.as("doc_id"), col("payload").as("text")),
-          batchId, corpusPath, storePath, minChars, lang, maxHamming)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(corpusPath -> "corpus", storePath -> "neardup_store"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(
+      graft.sources.WarcCorpus.readStreamQuarantined(spark, feedDir),
+      checkpoint, maintainEvery, maintainThresholds,
+      maintained(corpusPath, storePath)) { (batch, batchId) =>
+      graft.sources.WarcCorpus.rejects(batch)
+        .write.mode("overwrite")
+        .parquet(BatchCommit.partition(rejectsPath, batchId))
+      ingestBatch(graft.sources.WarcCorpus.goodRecords(batch)
+          .select(docIdOf.as("doc_id"), col("payload").as("text")),
+        batchId, corpusPath, storePath, minChars, lang, maxHamming)
+    }
 
   def startJsonl(spark: org.apache.spark.sql.SparkSession,
       feedDir: String, schema: org.apache.spark.sql.types.StructType,
@@ -282,20 +268,16 @@ object CorpusIngest {
     require(schema.fieldNames.contains("doc_id")
         && schema.fieldNames.contains("text"),
       "startJsonl: schema must carry doc_id and text for the gate")
-    graft.sources.JsonlCorpus
-      .readStreamQuarantined(spark, feedDir, schema)
-      .writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        graft.sources.JsonlCorpus.rejects(batch)
-          .write.mode("overwrite")
-          .parquet(s"$rejectsPath/ingest_batch=$batchId")
-        ingestBatch(graft.sources.JsonlCorpus.goodRows(batch),
-          batchId, corpusPath, storePath, minChars, lang, maxHamming)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(corpusPath -> "corpus", storePath -> "neardup_store"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(
+      graft.sources.JsonlCorpus.readStreamQuarantined(spark, feedDir,
+        schema),
+      checkpoint, maintainEvery, maintainThresholds,
+      maintained(corpusPath, storePath)) { (batch, batchId) =>
+      graft.sources.JsonlCorpus.rejects(batch)
+        .write.mode("overwrite")
+        .parquet(BatchCommit.partition(rejectsPath, batchId))
+      ingestBatch(graft.sources.JsonlCorpus.goodRows(batch),
+        batchId, corpusPath, storePath, minChars, lang, maxHamming)
+    }
   }
 }

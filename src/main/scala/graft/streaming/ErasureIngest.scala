@@ -39,12 +39,8 @@ object ErasureIngest {
   private[graft] val DrainedDir = "_graft_drained"
 
   /** Content fingerprint of a request batch (order-insensitive). */
-  def batchSig(batch: DataFrame, key: String): Long = {
-    val r = batch
-      .agg(coalesce(expr(s"bit_xor(xxhash64($key))"), lit(0L))
-        .as("x"), count(lit(1)).as("n")).head()
-    r.getLong(0) * 31L + r.getLong(1)
-  }
+  def batchSig(batch: DataFrame, key: String): Long =
+    BatchCommit.fingerprint(batch, expr(key))._1
 
   /** Pure per-batch enqueue body (testable without a streaming
     * runtime): distinct request keys land in the queue's
@@ -112,9 +108,13 @@ object ErasureIngest {
     val fs = root.getFileSystem(spark.sparkContext.hadoopConfiguration)
     // COMMITTED partitions only: an uncommitted one is a crashed
     // write whose checkpointed replay overwrites it — reading it
-    // would apply a torn batch and race the overwrite mid-scan; an
-    // absent or fully-compacted queue has nothing pending
-    val parts = committedParts(fs, root)
+    // would apply a torn batch and race the overwrite mid-scan (the
+    // committed-only read is what makes the enqueue/drain pair
+    // lock-free); an emptied one (compacted to its replay markers)
+    // holds no data and would break schema inference, and an absent
+    // or fully-compacted queue has nothing pending
+    val parts = BatchCommit.committed(fs, root)
+      .filter(BatchCommit.holdsData(fs, _))
     if (parts.isEmpty) return (0L, 0L)
     val queued = spark.read.option("basePath", queuePath)
       .parquet(parts.map(_.toString): _*)
@@ -173,7 +173,8 @@ object ErasureIngest {
     if (!fs.exists(root)) return QueueDebt(0L, 0L, 0L)
     val (queuedBatches, pendingBatches) = batchSets(spark, fs, root)
     val drainedPath = new org.apache.hadoop.fs.Path(root, DrainedDir)
-    val markDirs = markDirBatches(fs, drainedPath)
+    val markDirs = BatchCommit.partitions(fs, drainedPath)
+      .map(BatchCommit.batchIdOf).toSet
     val markRows =
       if (!fs.exists(drainedPath) ||
           !CdcPipeline.hasParquetData(fs, drainedPath)) 0L
@@ -211,19 +212,16 @@ object ErasureIngest {
     graft.ml.Maintenance.withWriterLock(fs, root, "compactQueue") {
       val (queuedBatches, pendingBatches) = batchSets(spark, fs, root)
       val fully = (queuedBatches -- pendingBatches).toSeq.sorted
-      fully.foreach { b =>
-        val part = new org.apache.hadoop.fs.Path(root,
-          s"ingest_batch=$b")
-        fs.listStatus(part).toSeq.map(_.getPath)
-          .filter(_.getName.endsWith(".parquet"))
-          .foreach { p => fs.delete(p, false); () }
-      }
+      BatchCommit.dropToStub(fs, fully.map(b =>
+        new org.apache.hadoop.fs.Path(
+          BatchCommit.partition(root.toString, b))))
       val drainedPath = new org.apache.hadoop.fs.Path(root, DrainedDir)
-      val orphans = (markDirBatches(fs, drainedPath) --
+      val orphans = (BatchCommit.partitions(fs, drainedPath)
+        .map(BatchCommit.batchIdOf).toSet --
         (queuedBatches -- fully.toSet)).toSeq.sorted
       orphans.foreach { b =>
-        fs.delete(new org.apache.hadoop.fs.Path(drainedPath,
-          s"ingest_batch=$b"), true)
+        fs.delete(new org.apache.hadoop.fs.Path(
+          BatchCommit.partition(drainedPath.toString, b)), true)
         ()
       }
       (fully.size.toLong, orphans.size.toLong)
@@ -237,7 +235,9 @@ object ErasureIngest {
   private def batchSets(spark: SparkSession,
       fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path): (Set[Long], Set[Long]) = {
-    val parts = committedParts(fs, root)
+    // the drain's read: committed partitions still holding data
+    val parts = BatchCommit.committed(fs, root)
+      .filter(BatchCommit.holdsData(fs, _))
     if (parts.isEmpty) return (Set.empty, Set.empty)
     val queued = spark.read.option("basePath", root.toString)
       .parquet(parts.map(_.toString): _*)
@@ -261,38 +261,4 @@ object ErasureIngest {
       .collect().map(_.getLong(0)).toSet
     (queuedBatches, pendingBatches)
   }
-
-  /** The queue's COMMITTED, non-emptied request partitions — the only
-    * ones drains and sweeps may read. An UNCOMMITTED partition (no
-    * `_SUCCESS`) is a crashed write the checkpointed stream will
-    * overwrite on replay: reading it would both apply a torn batch
-    * and race the replay's overwrite-delete mid-scan (the r16
-    * session review — committed-only reads are what make the
-    * enqueue/drain pair lock-free, now that the enqueue recovers
-    * debris by overwriting). An EMPTIED partition (compacted to its
-    * replay markers) holds no data and would break schema inference
-    * when every partition is in that state.
-    */
-  private def committedParts(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path)
-      : Seq[org.apache.hadoop.fs.Path] =
-    if (!fs.exists(root)) Seq.empty
-    else fs.listStatus(root).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest_batch="))
-      .map(_.getPath)
-      .filter(p => fs.exists(
-        new org.apache.hadoop.fs.Path(p, "_SUCCESS")))
-      .filter(p => fs.listStatus(p)
-        .exists(_.getPath.getName.endsWith(".parquet")))
-
-  /** The mark directories' batch ids (absent dir = none). */
-  private def markDirBatches(fs: org.apache.hadoop.fs.FileSystem,
-      drainedPath: org.apache.hadoop.fs.Path): Set[Long] =
-    if (!fs.exists(drainedPath)) Set.empty
-    else fs.listStatus(drainedPath).toSeq
-      .filter(st => st.isDirectory &&
-        st.getPath.getName.startsWith("ingest_batch="))
-      .map(_.getPath.getName.drop("ingest_batch=".length).toLong)
-      .toSet
 }

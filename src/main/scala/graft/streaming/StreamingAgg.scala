@@ -45,13 +45,9 @@ object StreamingAgg {
     * operator's columns.
     */
   def batchSig(batch: DataFrame, keys: Seq[String],
-      valueCol: String): Long = {
-    val cols = (keys :+ valueCol).map(c => s"`$c`").mkString(", ")
-    val r = batch
-      .agg(coalesce(expr(s"bit_xor(xxhash64($cols))"), lit(0L)).as("x"),
-        count(lit(1)).as("n")).head()
-    r.getLong(0) * 31L + r.getLong(1)
-  }
+      valueCol: String): Long =
+    BatchCommit.fingerprint(batch,
+      (keys :+ valueCol).map(c => col(s"`$c`")): _*)._1
 
   private def fs(spark: SparkSession, p: Path) =
     p.getFileSystem(spark.sparkContext.hadoopConfiguration)

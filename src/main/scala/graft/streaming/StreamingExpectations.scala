@@ -46,13 +46,9 @@ object StreamingExpectations {
     * — monitorBatch needs both, and a separate batch.count() would be
     * a third full scan of every trigger's delta.
     */
-  private def sigAndCount(batch: DataFrame): (Long, Long) = {
-    val cols = batch.columns.map(c => s"`$c`").mkString(", ")
-    val r = batch
-      .agg(coalesce(expr(s"bit_xor(xxhash64($cols))"), lit(0L)).as("x"),
-        count(lit(1)).as("n")).head()
-    (r.getLong(0) * 31L + r.getLong(1), r.getLong(1))
-  }
+  private def sigAndCount(batch: DataFrame): (Long, Long) =
+    BatchCommit.fingerprint(batch,
+      batch.columns.toSeq.map(c => col(s"`$c`")): _*)
 
   private def lastMarker(spark: SparkSession, outPath: String)
       : Option[(Long, Long)] =

@@ -143,12 +143,8 @@ object StreamingNearDup {
     * misread as a replay and silently drop. One 1-row driver aggregate
     * per batch.
     */
-  def batchSig(batch: DataFrame): Long = {
-    val r = batch
-      .agg(coalesce(expr("bit_xor(xxhash64(doc_id, text))"), lit(0L)).as("x"),
-        count(lit(1)).as("n")).head()
-    r.getLong(0) * 31L + r.getLong(1)
-  }
+  def batchSig(batch: DataFrame): Long =
+    BatchCommit.fingerprint(batch, col("doc_id"), col("text"))._1
 
   /** Wire the stream: novel docs → onBatch, their signatures appended
     * to the store. Delivery is at-least-once, never at-most-once:

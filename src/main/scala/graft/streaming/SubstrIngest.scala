@@ -104,7 +104,7 @@ object SubstrIngest {
       val spark = batch.sparkSession
       Dedup.exactSubstrIncrementAt(spark, batch, indexPath, maxIndexed)
         .write.mode("overwrite")
-        .parquet(s"$reportPath/ingest_batch=$batchId")
+        .parquet(BatchCommit.partition(reportPath, batchId))
       Dedup.appendSubstrIndexAt(spark, batch, indexPath, maxIndexed)
     }
   }

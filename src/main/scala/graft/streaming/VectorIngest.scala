@@ -16,12 +16,15 @@ import graft.ml.Similarity
   * the same partition-pruned probes.
   *
   * Delivery is at-most-once per batch id with replay absorption, the
-  * CorpusIngest discipline: every batch owns the partition directory
-  * `ingest_batch=<id>/` (committed ⇔ `_SUCCESS` exists) and records
-  * its content fingerprint in a `_GRAFT_BATCH_SIG` marker. A genuine
-  * replay (same id, same content, already committed) is skipped; a
-  * RECYCLED id after a checkpoint reset (same id, different content)
-  * fails loudly instead of silently dropping or duplicating vectors.
+  * [[BatchCommit]] ledger every streamed table shares: every batch
+  * owns the partition directory `ingest_batch=<id>/` (committed ⇔
+  * `_SUCCESS` exists) and records its content fingerprint in a
+  * `_GRAFT_BATCH_SIG` marker. A genuine replay (same id, same
+  * content, already committed) is skipped; a RECYCLED id after a
+  * checkpoint reset (same id, different content) fails loudly instead
+  * of silently dropping or duplicating vectors. Serving reads the
+  * ledger's committed, un-folded partitions ([[servePaths]], composed
+  * from [[BatchCommit]]'s listing and predicates).
   *
   * Scale: per-trigger work is one broadcast-centroid assignment over
   * the batch plus one partitioned write — O(batch), never O(index).
@@ -40,12 +43,8 @@ object VectorIngest {
     indexPath + Similarity.StreamSiblingSuffix
 
   /** Content fingerprint of a vector batch (order-insensitive). */
-  def batchSig(batch: DataFrame): Long = {
-    val r = batch
-      .agg(coalesce(expr("bit_xor(xxhash64(vec_id, embedding))"), lit(0L))
-        .as("x"), count(lit(1)).as("n")).head()
-    r.getLong(0) * 31L + r.getLong(1)
-  }
+  def batchSig(batch: DataFrame): Long =
+    BatchCommit.fingerprint(batch, col("vec_id"), col("embedding"))._1
 
   /** Pure per-batch body (testable without a streaming runtime). */
   def ingestBatch(batch: DataFrame, batchId: Long, indexPath: String)
@@ -80,7 +79,7 @@ object VectorIngest {
     }
 
   /** The at-most-once-per-batch-id commit discipline ([[BatchCommit]],
-    * shared with [[CorpusIngest]]): partition dir ownership,
+    * shared by every streamed table): partition dir ownership,
     * `_SUCCESS` ⇔ committed, content-fingerprint marker, recycled-id
     * refusal.
     */
@@ -115,26 +114,17 @@ object VectorIngest {
     }
 
   /** Wire the stream: micro-batches of (vec_id, embedding) append to
-    * the served index's stream table.
-    */
-  /** `maintainEvery` (0 = off) wires the every-N-batches
-    * auto-maintenance hook ([[graft.ml.Maintenance.maintainEveryN]],
-    * r15 verdict item 6) into the foreachBatch tail — serialized with
-    * this stream's own writes, so the sweep never races them.
+    * the served index's stream table, with the every-`maintainEvery`
+    * batches sweep of [[graft.ml.Maintenance.startMaintained]].
     */
   def start(streamingVecs: DataFrame, indexPath: String,
       checkpoint: String, maintainEvery: Int = 0,
       maintainThresholds: graft.ml.Maintenance.Thresholds =
         graft.ml.Maintenance.Thresholds()): StreamingQuery =
-    streamingVecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatch(batch, batchId, indexPath)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(indexPath -> "ivf"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(streamingVecs, checkpoint,
+      maintainEvery, maintainThresholds, Seq(indexPath -> "ivf")) {
+      (batch, batchId) => ingestBatch(batch, batchId, indexPath)
+    }
 
   /** [[start]] against a PQ-quantized base index (the "ivf" family:
     * PQ shares the IVF cell layout, tombstone table, fold, and
@@ -144,30 +134,20 @@ object VectorIngest {
       checkpoint: String, maintainEvery: Int = 0,
       maintainThresholds: graft.ml.Maintenance.Thresholds =
         graft.ml.Maintenance.Thresholds()): StreamingQuery =
-    streamingVecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchPq(batch, batchId, indexPath)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(indexPath -> "ivf"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(streamingVecs, checkpoint,
+      maintainEvery, maintainThresholds, Seq(indexPath -> "ivf")) {
+      (batch, batchId) => ingestBatchPq(batch, batchId, indexPath)
+    }
 
   /** [[start]] against a binary (sign-bit) base index. */
   def startBinary(streamingVecs: DataFrame, indexPath: String,
       checkpoint: String, maintainEvery: Int = 0,
       maintainThresholds: graft.ml.Maintenance.Thresholds =
         graft.ml.Maintenance.Thresholds()): StreamingQuery =
-    streamingVecs.writeStream
-      .option("checkpointLocation", checkpoint)
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        ingestBatchBinary(batch, batchId, indexPath)
-        graft.ml.Maintenance.maintainEveryN(batch.sparkSession,
-          batchId, maintainEvery, maintainThresholds,
-          Seq(indexPath -> "binary"))
-      }
-      .start()
+    graft.ml.Maintenance.startMaintained(streamingVecs, checkpoint,
+      maintainEvery, maintainThresholds, Seq(indexPath -> "binary")) {
+      (batch, batchId) => ingestBatchBinary(batch, batchId, indexPath)
+    }
 
   /** Serve binary top-k from base ∪ committed streamed appends —
     * bit-identical to a from-scratch [[Similarity.writeBinaryIndex]]
@@ -215,35 +195,20 @@ object VectorIngest {
       queries, rescoreFrom, k, refine, probes)
 
   /** The paths the serving joins may read: the base index plus only
-    * the COMMITTED streamed partitions. Committed ⇔ `_SUCCESS` — that
-    * is this file's own commit discipline ([[committedBatchWrite]]),
-    * and reading the whole stream table would break it: a write that
-    * died during job commit can leave data files in an
-    * `ingest_batch=N` dir with no `_SUCCESS`, and serving would
-    * return a partial vector set until the stream happens to replay
-    * that batch.
+    * the COMMITTED streamed partitions ([[BatchCommit.committed]]) —
+    * reading the whole stream table would serve a partial batch from
+    * a write that died during job commit.
     */
   private[streaming] def servePaths(spark: SparkSession,
       indexPath: String): Seq[String] = {
     val sp = new org.apache.hadoop.fs.Path(streamPath(indexPath))
     val fs = sp.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(sp)) Seq(indexPath)
-    else {
-      val committed = fs.listStatus(sp).toSeq
-        .filter(st => st.isDirectory &&
-          st.getPath.getName.startsWith("ingest_batch="))
-        .filter(st => fs.exists(
-          new org.apache.hadoop.fs.Path(st.getPath, "_SUCCESS")))
-        // a folded partition's rows live in the base now, or are in
-        // transit: the IVF/BM25 folds flip the marker BEFORE the
-        // move, the binary fold moves FIRST and flips after (its
-        // reader dedups on vec_id, so the overlap window is safe) —
-        // either way a marked partition must not be served from here
-        // or it would double-count
-        .filter(st => !fs.exists(new org.apache.hadoop.fs.Path(
-          st.getPath, Similarity.FoldedMarker)))
-        .map(_.getPath.toString)
-      indexPath +: committed
-    }
+    // a folded partition's rows live in the base now, or are in
+    // transit: the IVF/BM25 folds flip the marker BEFORE the move, the
+    // binary fold moves FIRST and flips after (its reader dedups on
+    // vec_id, so the overlap window is safe) — either way a marked
+    // partition must not be served from here or it would double-count
+    indexPath +: BatchCommit.committed(fs, sp)
+      .filterNot(BatchCommit.isFolded(fs, _)).map(_.toString)
   }
 }

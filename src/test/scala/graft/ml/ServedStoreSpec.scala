@@ -214,6 +214,53 @@ class ServedStoreSpec extends SparkSpec {
     assert(tombstoneIds === 2L)
   }
 
+  test("the manual base appends refuse under the maintenance writer " +
+      "lock and leave no new data file") {
+    val root = Files.createTempDirectory("graft_served_appends").toString
+    val (oldDocs, newDocs) =
+      (docs.filter(col("doc_id") <= 4L), docs.filter(col("doc_id") > 4L))
+    val (oldEmb, newEmb) =
+      (emb.filter(col("vec_id") <= 4L), emb.filter(col("vec_id") > 4L))
+    val c = cents
+    Similarity.writeIvfIndex(oldEmb, c, s"$root/ivf")
+    Similarity.writeIvfPqIndex(oldEmb, c,
+      Similarity.fitPqCodebook(emb, nSub = 2, codesPerSub = 2, iters = 1),
+      nSub = 2, s"$root/pq")
+    Retrieval.writeBm25Index(oldDocs, s"$root/bm25", nBuckets = 4)
+    Dedup.writeSubstrIndex(oldDocs, s"$root/substr", k = 4)
+    val appends: Seq[(String, String, String => Unit)] = Seq(
+      ("appendIvfIndex", s"$root/ivf",
+        Similarity.appendIvfIndex(spark, newEmb, _)),
+      ("appendIvfPqIndex", s"$root/pq",
+        Similarity.appendIvfPqIndex(spark, newEmb, _)),
+      ("appendBm25Index", s"$root/bm25",
+        Retrieval.appendBm25Index(spark, newDocs, _)),
+      ("appendSubstrIndex", s"$root/substr",
+        Dedup.appendSubstrIndex(spark, newDocs, _)))
+    val fs = new org.apache.hadoop.fs.Path(root)
+      .getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val offenders = appends.flatMap { case (op, path, append) =>
+      val marker = new org.apache.hadoop.fs.Path(path,
+        Maintenance.MaintainingMarker)
+      fs.create(marker, false).close()
+      val files0 = dataFiles(path, Maintenance.MaintainingMarker)
+      val refusal =
+        try { append(path); Some(s"$op: appended under the lock") }
+        catch {
+          case e: IllegalStateException
+              if e.getMessage.startsWith(s"$op: a maintenance sweep") =>
+            None
+          case e: Exception => Some(s"$op: ${messages(e)}")
+        }
+      val wrote =
+        if (dataFiles(path, Maintenance.MaintainingMarker) === files0) None
+        else Some(s"$op: wrote data files under the lock")
+      fs.delete(marker, false)
+      refusal ++ wrote
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+  }
+
   // one explicit test per store (not a generated loop), so the
   // README's suite count stays a count of test definitions
   test("bm25 store honours the tombstone contract") {

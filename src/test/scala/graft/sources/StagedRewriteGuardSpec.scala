@@ -5,11 +5,14 @@ import java.nio.file.{Files, Path, Paths}
 
 import org.scalatest.funsuite.AnyFunSuite
 
-/** Source guard for the staged-rewrite protocol (the
-  * [[RegistryGuardSpec]] pattern, over `src/main/scala`): each stage
-  * format is written once, in [[StagedRewrite]], and the writer lock is
-  * acquired once, in `Maintenance.withWriterLock`. A copied stage
-  * sequence or lock acquisition elsewhere fails here by name.
+/** Source guard for the staged-rewrite protocol and the batch ledger
+  * (the [[RegistryGuardSpec]] pattern, over `src/main/scala`): each
+  * stage format is written once, in [[StagedRewrite]], the writer lock
+  * is acquired once, in `Maintenance.withWriterLock`, and the batch
+  * ledger's format (partition name, sig and fold markers, content
+  * fingerprint) is known once, in `graft.streaming.BatchCommit`. A
+  * copied stage sequence, lock acquisition or ledger literal elsewhere
+  * fails here by name.
   */
 class StagedRewriteGuardSpec extends AnyFunSuite {
 
@@ -27,7 +30,7 @@ class StagedRewriteGuardSpec extends AnyFunSuite {
       val close = if (triple) "\"\"\"" else "\""
       val lit = new StringBuilder
       while (i < src.length && !at(close)) {
-        if (!triple && src(i) == '\\') { lit.append(src, i, i + 2); i += 2 }
+        if (!triple && src(i) == '\\') { lit.append(src.substring(i, i + 2)); i += 2 }
         else if (interpolated && at("${")) {
           i += 2
           var depth = 1
@@ -69,6 +72,11 @@ class StagedRewriteGuardSpec extends AnyFunSuite {
 
   private val StageLiterals =
     Seq("_GRAFT_STAGE_ID", "graftc-", "graftf-", "/_parts")
+
+  /** The batch ledger's format, owned by `BatchCommit.scala`. */
+  private val LedgerLiterals =
+    Seq("ingest_batch=", "_GRAFT_BATCH_SIG", "_GRAFT_FOLDED",
+      "bit_xor(xxhash64")
 
   private def sources: Seq[(Path, String)] = {
     val root = Paths.get("src/main/scala")
@@ -123,5 +131,25 @@ class StagedRewriteGuardSpec extends AnyFunSuite {
     assert(StageLiterals.forall(l => stageLits.exists(_.contains(l))),
       s"StagedRewrite's literals: $stageLits")
     assert(stageCode.contains("def rewriteBuckets"))
+  }
+
+  test("the batch ledger's format is known once: no ledger literal or " +
+      "fingerprint formula outside BatchCommit") {
+    val owner =
+      Paths.get("src/main/scala/graft/streaming/BatchCommit.scala")
+    val scanned = sources.map { case (p, src) => (p, scan(src)) }
+    assert(scanned.exists(_._1 == owner))
+    // string literals, and code too: the formula is a Column call
+    def holds(scan: (String, Seq[String]), l: String) =
+      scan._1.contains(l) || scan._2.exists(_.contains(l))
+    val offenders = scanned.filter(_._1 != owner).flatMap {
+      case (p, sc) =>
+        LedgerLiterals.filter(holds(sc, _)).map(l => s"$p: '$l'")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // the owner still holds them: the guard must not go blind
+    val ownerScan = scanned.find(_._1 == owner).get._2
+    assert(LedgerLiterals.forall(holds(ownerScan, _)),
+      s"BatchCommit's literals: ${ownerScan._2}")
   }
 }

@@ -181,8 +181,8 @@ class Bm25IngestSpec extends SparkSpec {
           idx + graft.ml.Similarity.StreamSiblingSuffix, n)
         assert(fs.exists(new org.apache.hadoop.fs.Path(st, "_SUCCESS")))
         assert(fs.exists(new org.apache.hadoop.fs.Path(st,
-          graft.ml.Similarity.FoldedMarker)))
-        assert(!graft.ml.Similarity.hasParquetData(fs, st))
+          BatchCommit.FoldedMarker)))
+        assert(!BatchCommit.holdsData(fs, st))
       }
       // folded serving == from-scratch build of the surviving corpus —
       // df, n_docs, avgdl re-derived over the union
@@ -211,7 +211,7 @@ class Bm25IngestSpec extends SparkSpec {
         .write.mode("overwrite").partitionBy("bkt")
         .parquet(s"$batch0Dir/postings")
       dlB.write.mode("overwrite").parquet(s"$batch0Dir/docs")
-      assert(graft.ml.Similarity.hasParquetData(fs, batch0Dir))
+      assert(BatchCommit.holdsData(fs, batch0Dir))
       assert(Retrieval.foldStreamIntoBm25Index(spark, idx) === 1L)
       assert(serve(idx) === serve(aliveIdx))
       val docDups = spark.read.parquet(s"$idx/${Retrieval.DocsDir}")
@@ -224,7 +224,7 @@ class Bm25IngestSpec extends SparkSpec {
       assert(tombstonesEmpty(idx, "_graft_bm25_deleted"))
       // replay absorption survives the fold; recycled ids still refuse
       Bm25Ingest.ingestBatch(b0, 0L, idx)
-      assert(!graft.ml.Similarity.hasParquetData(fs, batch0Dir),
+      assert(!BatchCommit.holdsData(fs, batch0Dir),
         "a genuine replay re-materialized a folded batch")
       intercept[IllegalArgumentException] {
         Bm25Ingest.ingestBatch(b1, 0L, idx)

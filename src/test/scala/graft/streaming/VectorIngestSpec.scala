@@ -200,7 +200,7 @@ class VectorIngestSpec extends SparkSpec {
       val batch0Dir = new org.apache.hadoop.fs.Path(
         idx + Similarity.StreamSiblingSuffix, "ingest_batch=0")
       fs.create(new org.apache.hadoop.fs.Path(batch0Dir,
-        Similarity.FoldedMarker), true).close()
+        BatchCommit.FoldedMarker), true).close()
       val alive = embs.filter(!col("vec_id").isin(0L, 1L))
       val gapJs = served(alive).map(_._3)
       assert(gapJs.intersect(b0Ids).isEmpty,
@@ -220,8 +220,8 @@ class VectorIngestSpec extends SparkSpec {
         assert(fs.exists(new org.apache.hadoop.fs.Path(st,
           "_GRAFT_BATCH_SIG")))
         assert(fs.exists(new org.apache.hadoop.fs.Path(st,
-          Similarity.FoldedMarker)))
-        assert(!Similarity.hasParquetData(fs, st),
+          BatchCommit.FoldedMarker)))
+        assert(!BatchCommit.holdsData(fs, st),
           s"stub $st still holds data")
       }
       // folded-then-compacted serving == from-scratch build of the
@@ -241,7 +241,7 @@ class VectorIngestSpec extends SparkSpec {
       fs.delete(batch0Dir, true)
       org.apache.hadoop.fs.FileUtil.copy(fs, saved, fs, batch0Dir,
         false, spark.sparkContext.hadoopConfiguration)
-      assert(Similarity.hasParquetData(fs, batch0Dir))
+      assert(BatchCommit.holdsData(fs, batch0Dir))
       assert(Similarity.foldStreamIntoIvfIndex(spark, idx) === 1L)
       assert(served(alive) === fromScratch)
       val dupCount = spark.read.parquet(idx)
@@ -256,7 +256,7 @@ class VectorIngestSpec extends SparkSpec {
       // replay absorption survives the fold: same (id, content) no-ops
       // against the stub; a recycled id still fails loudly
       VectorIngest.ingestBatch(b0, 0L, idx)
-      assert(!Similarity.hasParquetData(fs, batch0Dir),
+      assert(!BatchCommit.holdsData(fs, batch0Dir),
         "a genuine replay re-materialized a folded batch")
       intercept[IllegalArgumentException] {
         VectorIngest.ingestBatch(b1, 0L, idx)
@@ -287,7 +287,7 @@ class VectorIngestSpec extends SparkSpec {
       assert(Similarity.foldStreamIntoIvfIndex(spark, idx) === 2L)
       val fs = new org.apache.hadoop.fs.Path(idx)
         .getFileSystem(spark.sparkContext.hadoopConfiguration)
-      assert(!Similarity.streamSiblingHoldsData(fs,
+      assert(!BatchCommit.anyHoldsData(fs,
         new org.apache.hadoop.fs.Path(
           idx + Similarity.StreamSiblingSuffix)))
       val full = tmp.resolve("full").toString
