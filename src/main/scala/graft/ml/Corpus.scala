@@ -1185,9 +1185,9 @@ object Corpus {
     * cascade that had already re-admitted copies would otherwise
     * duplicate content it still serves).
     *
-    * The id set is null-checked and materialized ONCE
-    * (localCheckpoint) so seven appends reuse one small computation
-    * instead of re-executing an arbitrary caller plan seven times.
+    * The id set is null-checked and cut ONCE ([[Materialize.withCut]])
+    * so seven appends reuse one small computation instead of
+    * re-executing an arbitrary caller plan seven times.
     * Returns the number of stores tombstoned.
     */
   def takedown(spark: org.apache.spark.sql.SparkSession,
@@ -1195,16 +1195,17 @@ object Corpus {
       ledgerPath: Option[String] = None): Int = {
     require(targets.count > 0,
       "takedown: no target stores named — nothing would be deleted")
-    val ids = docIds.select(
+    Materialize.withCut(docIds.select(
         when(col("doc_id").isNotNull, col("doc_id"))
           .otherwise(raise_error(
             lit("takedown: null doc_id in delete batch")))
           .as("doc_id"))
-      .distinct().localCheckpoint()
-    targets.stores.foreach { case (store, p) =>
-      store.delete(spark, ids.select(col("doc_id").as(store.idCol)), p)
+      .distinct()) { ids =>
+      targets.stores.foreach { case (store, p) =>
+        store.delete(spark, ids.select(col("doc_id").as(store.idCol)), p)
+      }
+      ledgerPath.foreach(appendTakedownLedger(spark, ids, targets, _))
     }
-    ledgerPath.foreach(lp => appendTakedownLedger(spark, ids, targets, lp))
     targets.count
   }
 

@@ -249,9 +249,7 @@ object Dedup {
     // positional frame is refused: hs is the verify PAYLOAD both
     // verify joins must read, so staying lazy re-runs the full
     // tokenize+md5+collect_set aggregate per join side — strictly more
-    // storage-write traffic than one materialization. As a
-    // corpus-scale cut it routes through [[Materialize.cut]], the
-    // central fault-tolerance policy (reliable checkpoint opt-in).
+    // storage-write traffic than one materialization.
     val sigs = Materialize.cut(minhashSignatures(docs, n, k))
     // LATE MATERIALIZATION: the band rows and the candidate distinct
     // carry ONLY (doc_id, band, bh) — carrying each document's full
@@ -553,10 +551,9 @@ object Dedup {
       // sizing window execute four times. N·bands narrow rows,
       // materialized once — the same order of storage as the band
       // shuffle the join needs anyway.
-      val sized = banded.withColumn("bsz",
+      val sized = Materialize.cut(banded.withColumn("bsz",
         count(lit(1)).over(org.apache.spark.sql.expressions.Window
-          .partitionBy(col("band"), col("band_bits"))))
-        .localCheckpoint()
+          .partitionBy(col("band"), col("band_bits")))))
       val cold = pairJoin(sized.filter(col("bsz") <= hotBucketCap),
         Seq("band", "band_bits"))
       val hot = pairJoin(
@@ -626,7 +623,7 @@ object Dedup {
     // the routed branch) — without a materialization boundary the
     // per-doc signature aggregate re-executes per consumer (the ns22
     // localCheckpoint discipline; measured ~2× on the Zipf probe)
-    val sig = sh.localCheckpoint()
+    val sig = Materialize.cut(sh)
     // bounded driver action: ONE row — total banded candidate volume
     // (as Σ c·(c−1), decimal-widened like the wedge count) and the
     // banded row count (= N·bands exactly, one row per doc per band)

@@ -1,73 +1,32 @@
 package graft.ml
 
-import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** Generation-scoped checkpoint manager for iterative driver loops
-  * (BPE training, label propagation): each `cut` truncates the
-  * iterate's lineage and RECLAIMS the superseded generation —
-  * without reclamation a 30k-iteration loop accumulates one full
-  * corpus copy per iteration (executor storage blocks on the local
-  * path; `rdd-<id>` snapshot dirs on disk on the reliable path).
-  *
-  * `reliable = false`: `localCheckpoint` — executor-storage blocks,
-  * fast, lost with an executor; right for local mode and short loops.
-  * `reliable = true`: `checkpoint()` through the fault-tolerant
-  * checkpoint dir (`sc.setCheckpointDir` required up front, not
-  * discovered by a mid-loop crash), surviving executor loss.
-  *
-  * Ownership is EXACT, not inferred: each cut's returned plan is a
-  * single LogicalRDD leaf wrapping the RDD the checkpoint just
-  * materialized ([[org.apache.spark.sql.graft.RddBridge]]), and that
-  * reference is what reclamation later unpersists (and, on the
-  * reliable path, whose snapshot files it deletes). The previous
-  * generation is freed only after the new one is fully materialized
-  * (both checkpoint flavors are eager here), so a crash between
-  * generations always leaves one complete snapshot. Because each
-  * instance frees only RDDs it created itself, CONCURRENT driver
-  * threads may checkpoint against the same SparkContext freely — the
-  * earlier snapshot-diff idiom (getPersistentRDDs before/after)
-  * claimed anything that appeared in the window, so an overlapped
-  * serve/gate thread's blocks could be reclaimed out from under a
-  * running job (CHECKPOINT_RDD_BLOCK_ID_NOT_FOUND).
-  *
-  * Call `close()` when the loop's result has been consumed onto the
-  * driver (BPE's merge table); SKIP it when the returned DataFrame
-  * IS the last generation (label propagation) — the caller still
-  * reads those blocks/files.
+/** Generation-scoped cuts for iterative driver loops (BPE training,
+  * label propagation, graph rounds): each [[cut]] truncates the
+  * iterate's lineage through [[Materialize.cut]], then frees the
+  * superseded generation through [[Materialize.release]] — else a
+  * 30k-iteration loop keeps one corpus copy per iteration. A crash
+  * between generations still leaves one complete snapshot. Call
+  * `close()` once the loop's result is consumed onto the driver
+  * (BPE's merge table); SKIP it when the returned frame IS the last
+  * generation (label propagation).
   */
 private[graft] final class GenCheckpointer(spark: SparkSession,
     reliable: Boolean) {
-  private val sc = spark.sparkContext
-  require(!reliable || sc.getCheckpointDir.isDefined,
-    "reliable=true needs sc.setCheckpointDir(...) before the loop")
+  Materialize.requireCheckpointDir(spark, reliable)
 
-  private var gen = Set.empty[RDD[_]]
+  private var gen = Option.empty[DataFrame]
 
-  private def free(g: Set[RDD[_]]): Unit = g.foreach { r =>
-    if (reliable) r.getCheckpointFile.foreach { p =>
-      val path = new org.apache.hadoop.fs.Path(p)
-      path.getFileSystem(sc.hadoopConfiguration).delete(path, true)
-      ()
-    }
-    // local checkpoints persist executor-storage blocks; reliable
-    // checkpoints never persisted, so this is a no-op there
-    r.unpersist(blocking = false)
-    ()
-  }
-
-  /** Checkpoint `df` eagerly as the new generation; free the previous
-    * one. */
+  /** Cut `df` as the new generation; free the previous one. */
   def cut(df: DataFrame): DataFrame = {
-    val out = if (reliable) df.checkpoint(true)
-      else df.localCheckpoint(true)
-    val mine = org.apache.spark.sql.graft.RddBridge.checkpointedRdd(out)
-    free(gen)
-    gen = mine.toSet
+    val out = Materialize.cut(df, reliable)
+    close()
+    gen = Some(out)
     out
   }
 
   /** Free the LAST generation too — only once its content has been
     * consumed (e.g. collected to the driver). */
-  def close(): Unit = { free(gen); gen = Set.empty }
+  def close(): Unit = { gen.foreach(Materialize.release); gen = None }
 }

@@ -95,9 +95,9 @@ object Retrieval {
     require(budgetDfPerQuery > 0L, "budgetDfPerQuery must be positive")
     val qterms = queries.select(col("query_id"),
       explode(col("terms")).as("term")).distinct()
-    val posting = tf.join(
+    val posting = Materialize.cut(tf.join(
       broadcast(qterms.select(col("term")).distinct()),
-      Seq("term"), "left_semi").localCheckpoint()
+      Seq("term"), "left_semi"))
     // nq(t) = how many queries contain t; ≤ |distinct query terms|
     // rows, broadcast into the df aggregate
     val nq = qterms.groupBy(col("term")).agg(count(lit(1)).as("nq"))

@@ -76,11 +76,10 @@ private[graft] final case class ServedStore private (
     */
   def reappendPending(dead: DataFrame, live: Option[DataFrame],
       root: String, pin: Boolean): Unit = {
-    val pending = live.fold(dead) { l =>
-      val p = antiJoin(dead, l.select(col(idCol)))
-      if (pin) p.localCheckpoint() else p
-    }
-    if (!pending.isEmpty) append(pending, root)
+    val pending = live.fold(dead)(l => antiJoin(dead, l.select(col(idCol))))
+    def go(p: DataFrame): Unit = if (!p.isEmpty) append(p, root)
+    if (pin && live.isDefined) Materialize.withCut(pending)(go)
+    else go(pending)
   }
 
   /** Wire a DELETE stream: each micro-batch of [[idCol]] rows is

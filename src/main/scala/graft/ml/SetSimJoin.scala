@@ -78,10 +78,9 @@ object SetSimJoin {
     // subtrees in the ns39 before plan). The prefix rows are the SMALL
     // end of the operator (~(1−τ)·|s|+1 tokens per doc, 3 narrow
     // columns), so materializing once is the right trade at any scale.
-    val prefix = ordered.filter(col("pos") <=
+    val prefix = Materialize.cut(ordered.filter(col("pos") <=
       col("sz") - ceil(lit(threshold) * col("sz") - lit(1e-9)) + 1)
-      .select(col("doc_id"), col("h"), col("sz"))
-      .localCheckpoint()
+      .select(col("doc_id"), col("h"), col("sz")))
     val cand = prefix.select(col("doc_id").as("i"), col("h"),
         col("sz").as("sz_i"))
       .join(prefix.select(col("doc_id").as("j"), col("h"),

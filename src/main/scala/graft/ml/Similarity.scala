@@ -361,10 +361,10 @@ object Similarity {
     // this scan with different filters below their window shuffles, so
     // without a boundary the |anchors|·N dot-product pass executes
     // twice (the mmrRerank materialization lesson, same session)
-    val scored = a.crossJoin(b).filter(col("i") =!= col("j"))
+    val scored = Materialize.cut(a.crossJoin(b)
+      .filter(col("i") =!= col("j"))
       .withColumn("cos", pairCos)
-      .select(col("i"), col("j"), col("cos"))
-      .localCheckpoint()
+      .select(col("i"), col("j"), col("cos")))
     tripletWindows(scored, posThreshold, negLo, nNegs)
   }
 
@@ -426,14 +426,13 @@ object Similarity {
         col("bucket")), Seq("band", "bucket"))
       .filter(col("i") =!= col("j"))
       .select(col("i"), col("j")).distinct()
-    val scored = cand
+    val scored = Materialize.cut(cand
       .join(n.select(col("vec_id").as("i"), col("e").as("ea"),
         col("nrm").as("na")), Seq("i"))
       .join(n.select(col("vec_id").as("j"), col("e").as("eb"),
         col("nrm").as("nb")), Seq("j"))
       .withColumn("cos", pairCos)
-      .select(col("i"), col("j"), col("cos"))
-      .localCheckpoint()
+      .select(col("i"), col("j"), col("cos")))
     tripletWindows(scored, posThreshold, negLo, nNegs)
   }
 
@@ -526,19 +525,17 @@ object Similarity {
     // 15.7 s at sf0.1; localCheckpointing the two list-sized tables
     // collapses the loop to window-over-tiny-data, the ns22
     // materialization discipline)
-    val rel = candidates
-      .select(col("i"), col("j"), col("rel"))
-      .localCheckpoint()
+    val rel = Materialize.cut(candidates
+      .select(col("i"), col("j"), col("rel")))
     // pairwise candidate sims WITHIN each query's list: |Q|·m² rows
-    val sims = rel.select(col("i"), col("j").as("ja"))
+    val sims = Materialize.cut(rel.select(col("i"), col("j").as("ja"))
       .join(rel.select(col("i"), col("j").as("jb")), Seq("i"))
       .filter(col("ja") =!= col("jb"))
       .join(n.select(col("vec_id").as("ja"), col("e").as("ea"),
         col("nrm").as("na")), Seq("ja"))
       .join(n.select(col("vec_id").as("jb"), col("e").as("eb"),
         col("nrm").as("nb")), Seq("jb"))
-      .select(col("i"), col("ja"), col("jb"), pairCos.as("sim"))
-      .localCheckpoint()
+      .select(col("i"), col("ja"), col("jb"), pairCos.as("sim")))
     val w = Window.partitionBy(col("i"))
       .orderBy(col("score").desc, col("j"))
     def pick(scored: DataFrame, rank: Int): DataFrame =
@@ -556,8 +553,8 @@ object Similarity {
     // unchanged — each step still scores exactly the not-yet-picked
     // candidates against the picked set.
     // step 1: pure relevance (max over the empty selected set is 0)
-    var steps = List(pick(rel.withColumn("score",
-      round(lit(lam) * col("rel"), 6)), 1).localCheckpoint())
+    var steps = List(Materialize.cut(pick(rel.withColumn("score",
+      round(lit(lam) * col("rel"), 6)), 1)))
     for (t <- 2 to k) {
       val pickedIJ = steps.map(_.select(col("i"), col("j")))
         .reduce(_.unionAll(_))
@@ -573,7 +570,7 @@ object Similarity {
         .agg(coalesce(max(col("sim")), lit(0.0)).as("maxsim"))
       val scored = maxsim.withColumn("score",
         round(lit(lam) * col("rel") - lit(1 - lam) * col("maxsim"), 6))
-      steps ::= pick(scored, t).localCheckpoint()
+      steps ::= Materialize.cut(pick(scored, t))
     }
     steps.reverse.reduce(_.unionByName(_)).orderBy(col("i"), col("rank"))
   }
@@ -648,9 +645,9 @@ object Similarity {
     // §9 CollapseProject hazard, when-chain edition). The checkpoint
     // is the binary INDEX itself — ⌈dim/64⌉ longs per vector, the
     // table a serving deployment would persist anyway.
-    val z = n.withColumn("bits", packSignBits(col("e"), dim))
-      .select(col("vec_id"), col("bits"))
-      .localCheckpoint()
+    val z = Materialize.cut(n
+      .withColumn("bits", packSignBits(col("e"), dim))
+      .select(col("vec_id"), col("bits")))
     val qa = z.select(col("vec_id").as("i"), col("bits").as("ba"))
     val qb = z.select(col("vec_id").as("j"), col("bits").as("bb"))
     val wApprox = Window.partitionBy(col("i"))
@@ -970,7 +967,7 @@ object Similarity {
     // aggregate and/or tombstone anti-join), re-executing that work
     // per consumer doubles it — materialize the N bit-rows once.
     val hardened = needsDedup || tombs.isDefined
-    (dim, if (hardened) z.localCheckpoint() else z)
+    (dim, if (hardened) Materialize.cut(z) else z)
   }
 
   /** The scan serve tail: |queries|·N xor+popcount candidate rank,
@@ -1295,7 +1292,7 @@ object Similarity {
       .select(col("vec_id"), col("bits"))
     val z = ServedStore.Binary.mask(spark, Seq(path), raw)
     // ONE scan feeds the measurement AND both branches
-    val banded = signBanded(z, dim, nb).localCheckpoint()
+    val banded = Materialize.cut(signBanded(z, dim, nb))
     val st = banded.groupBy(col("band"), col("band_bits"))
       .agg(count(lit(1)).as("c"))
       .agg(
@@ -1338,30 +1335,16 @@ object Similarity {
     // per gate — the single largest re-derivation in the registry
     // (every ANN entry wraps itself in this). Both frames are
     // top-k-sized (≤ N·k rows), so materializing them is cheap at any
-    // scale. The brute reference is INDEPENDENT of everything on the
-    // approximate side, so its materialization starts FIRST on a
-    // second thread and the whole approximate side — `approx` is
-    // by-name, so a caller's fit jobs and serve-construction collects
-    // evaluate HERE, not at the call site — runs concurrently with
-    // the N²/sampleMod reference pass: the gate pays
-    // max(approx side, brute) wall instead of their sum, and each
-    // job's stragglers back-fill the other's idle cores (guide §2.6 —
-    // the ns68 surface-construction discipline applied to the
-    // registry's most-shared gate).
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(1)
-    val (ap, bruteIds) =
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        val fb = Future(
-          brute.filter(pmod(col("i"), lit(sampleMod)) === 0)
-            .select(col("i"), col("j"))
-            .localCheckpoint())
-        val a = approx.localCheckpoint()
-        (a, Await.result(fb,
-          scala.concurrent.duration.Duration.Inf))
-      } finally pool.shutdown()
+    // scale. The brute reference is INDEPENDENT of the approximate
+    // side, so the two cuts overlap: `approx` is by-name, so a
+    // caller's fit jobs and serve-construction collects evaluate HERE,
+    // beside the N²/sampleMod reference pass, and the gate pays
+    // max(approx side, brute) wall instead of their sum.
+    val Seq(bruteIds, ap) = Materialize.overlap(Seq(
+      () => Materialize.cut(
+        brute.filter(pmod(col("i"), lit(sampleMod)) === 0)
+          .select(col("i"), col("j"))),
+      () => Materialize.cut(approx)))
     val hits = ap.select(col("i"), col("j"))
       .join(bruteIds, Seq("i", "j"), "left_semi")
       .groupBy(col("i")).agg(count(lit(1)).as("n_hits"))
@@ -1535,7 +1518,7 @@ object Similarity {
     // both sides of the intra-cell join read the assignment;
     // materialize the N×|cents| cosine pass once (the semDedup /
     // ivfTopKAuto single-assignment-pass discipline)
-    val assigned = assignCells(embeddings, cents).localCheckpoint()
+    val assigned = Materialize.cut(assignCells(embeddings, cents))
     val a = assigned.select(col("vec_id").as("i"), col("e").as("ea"),
       col("nrm").as("na"), col("cell"))
     val b = assigned.select(col("vec_id").as("j"), col("e").as("eb"),
@@ -1585,8 +1568,8 @@ object Similarity {
       "the routed form needs a positive cellCandidateCap to engage")
     require(budgetCandidatesPerQuery > 0L,
       "budgetCandidatesPerQuery must be positive")
-    val assigned = assignCells(embeddings,
-      seedCentroids(embeddings, nCells)).localCheckpoint()
+    val assigned = Materialize.cut(assignCells(embeddings,
+      seedCentroids(embeddings, nCells)))
     val st = assigned.groupBy(col("cell"))
       .agg(count(lit(1)).as("c"))
       .agg(
@@ -1641,8 +1624,8 @@ object Similarity {
     // ONE ranked assignment pass by construction — and one EXECUTION
     // too: the query side and the crk=1 index slice both consume it,
     // so materialize the N·probes assignment rows once
-    val ranked = assignRanked(withNorm(embeddings), cents, probes)
-      .localCheckpoint()
+    val ranked = Materialize.cut(
+      assignRanked(withNorm(embeddings), cents, probes))
     val index = ranked.filter(col("crk") === 1)
       .select(col("vec_id").as("j"), col("e").as("eb"),
         col("nrm").as("nb"), col("cell"))
@@ -2202,7 +2185,7 @@ object Similarity {
     // query side and crk=1 index slice both consume the ranked
     // assignment — materialize the N·probes rows once (the
     // ivfTopKMultiProbe discipline)
-    val ranked = assignRanked(n, cents, probes).localCheckpoint()
+    val ranked = Materialize.cut(assignRanked(n, cents, probes))
     val index = ranked.filter(col("crk") === 1)
       .select(col("vec_id").as("j"), col("cell"))
       .join(pqEncode(embeddings, codebook, nSub)
@@ -2394,12 +2377,12 @@ object Similarity {
     // preNq/preRanked let the routed caller hand in the frames its
     // volume probe already materialized (one normalize + assignment
     // pass for probe AND serve — r17, the ns7l audit).
-    val nq = preNq.getOrElse(withNorm(queries).localCheckpoint())
-    val qr = preRanked.getOrElse(assignRanked(nq, cents, probes))
-      .select(col("vec_id").as("i"), col("nrm").as("na"), col("cell"))
-      .join(pqLutNormed(nq, codebook, nSub, codesPerSub)
-        .select(col("vec_id").as("i"), col("lut")), Seq("i"))
-      .localCheckpoint()
+    val nq = preNq.getOrElse(Materialize.cut(withNorm(queries)))
+    val qr = Materialize.cut(
+      preRanked.getOrElse(assignRanked(nq, cents, probes))
+        .select(col("vec_id").as("i"), col("nrm").as("na"), col("cell"))
+        .join(pqLutNormed(nq, codebook, nSub, codesPerSub)
+          .select(col("vec_id").as("i"), col("lut")), Seq("i")))
     val cells = qr.select(col("cell")).distinct()
       .collect().map(_.getLong(0))
     val pruned = ServedStore.Ivf.mask(spark, paths, paths.map { p =>
@@ -2410,12 +2393,12 @@ object Similarity {
     }.reduce(_.unionByName(_)), "j")
     val index =
       if (cellCandidateCap <= 0L) pruned
-      // localCheckpoint the capped set (≤ cap·|probed cells| rows):
+      // cut the capped set (≤ cap·|probed cells| rows):
       // the ADC join then consumes a materialized table with exact
       // stats instead of re-executing the rank/offset subplan, and
       // the downstream refine/rescore reuse it
-      else Corpus.cappedIdPrefix(pruned, "j", Seq("cell"),
-        cellCandidateCap).localCheckpoint()
+      else Materialize.cut(Corpus.cappedIdPrefix(pruned, "j", Seq("cell"),
+        cellCandidateCap))
     val wA = Window.partitionBy(col("i")).orderBy(col("acos").desc, col("j"))
     val cand = qr.join(index, Seq("cell")).filter(col("i") =!= col("j"))
       .withColumn("acos", round(
@@ -2491,8 +2474,8 @@ object Similarity {
     // assignment are checkpointed ONCE and handed to the serving core
     // — the probe was re-deriving the same N×|cents| cosine pass the
     // serve then re-ran (r17, the ns7l audit)
-    val nq = withNorm(queries).localCheckpoint()
-    val ranked = assignRanked(nq, cents, probes).localCheckpoint()
+    val nq = Materialize.cut(withNorm(queries))
+    val ranked = Materialize.cut(assignRanked(nq, cents, probes))
     val qc = ranked.groupBy(col("cell")).agg(count(lit(1)).as("qn"))
     val ic = ServedStore.Ivf.mask(spark, Seq(path),
         spark.read.parquet(path).select(col("vec_id"), col("cell")))
@@ -2613,7 +2596,7 @@ object Similarity {
     // projection); materialize it once so the N×|cents| cosine pass
     // runs once — the same single-assignment-pass discipline
     // semDedupAuto already applies before its volume measurement
-    semDedupFromAssigned(assignCells(embeddings, cents).localCheckpoint(),
+    semDedupFromAssigned(Materialize.cut(assignCells(embeddings, cents)),
       threshold, cellOccupancyCap)
 
   /** The SemDeDup ROUTER — [[graft.ml.Dedup.simhashPairsAuto]]'s
@@ -2641,7 +2624,7 @@ object Similarity {
     require(cellOccupancyCap > 0L,
       "the routed form needs a positive cellOccupancyCap to engage")
     require(budgetPairsPerVec > 0L, "budgetPairsPerVec must be positive")
-    val assigned = assignCells(embeddings, cents).localCheckpoint()
+    val assigned = Materialize.cut(assignCells(embeddings, cents))
     // bounded driver action: ONE row — the intra-cell candidate
     // volume (as Σ c·(c−1), decimal-widened like the ns5d candidate
     // count) and the assigned vector count
@@ -2725,11 +2708,10 @@ object Similarity {
     // assignment its volume probe already executed, so the router
     // pays ONE N×|cents| cosine pass instead of two (r17: the probe
     // and the serve were re-deriving the same front).
-    val qr = preAssigned.getOrElse(
+    val qr = preAssigned.getOrElse(Materialize.cut(
       assignRanked(withNorm(queries), cents, probes)
         .select(col("vec_id").as("i"), col("e").as("ea"),
-          col("nrm").as("na"), col("cell"))
-        .localCheckpoint())
+          col("nrm").as("na"), col("cell"))))
     val cells = qr.select(col("cell")).distinct()
       .collect().map(_.getLong(0))
     val pruned = ServedStore.Ivf.mask(spark, paths, paths.map { p =>
@@ -2742,12 +2724,12 @@ object Similarity {
     }.reduce(_.unionByName(_)), "j")
     val index =
       if (cellCandidateCap <= 0L) pruned
-      // localCheckpoint the capped set (≤ cap·|probed cells| rows):
+      // cut the capped set (≤ cap·|probed cells| rows):
       // the serve join then consumes a materialized table with exact
       // stats instead of re-executing the rank subplan per consumer
       // (the queryIvfPqCore discipline)
-      else Corpus.cappedIdPrefix(pruned, "j", Seq("cell"),
-        cellCandidateCap).localCheckpoint()
+      else Materialize.cut(Corpus.cappedIdPrefix(pruned, "j", Seq("cell"),
+        cellCandidateCap))
     val w = Window.partitionBy(col("i")).orderBy(col("cos").desc, col("j"))
     qr.join(index, Seq("cell")).filter(col("i") =!= col("j"))
       .withColumn("cos", pairCos)
@@ -2804,10 +2786,9 @@ object Similarity {
     // The ranked assignment is checkpointed ONCE and handed to the
     // serving core — the probe was re-deriving the same N×|cents|
     // cosine pass the serve then re-ran (r17, the ns46i/ns7l audit)
-    val qr = assignRanked(withNorm(queries), cents, probes)
+    val qr = Materialize.cut(assignRanked(withNorm(queries), cents, probes)
       .select(col("vec_id").as("i"), col("e").as("ea"),
-        col("nrm").as("na"), col("cell"))
-      .localCheckpoint()
+        col("nrm").as("na"), col("cell")))
     val qc = qr.groupBy(col("cell")).agg(count(lit(1)).as("qn"))
     val ic = ServedStore.Ivf.mask(spark, Seq(path),
         spark.read.parquet(path).select(col("vec_id"), col("cell")))

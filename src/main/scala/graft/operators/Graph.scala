@@ -95,11 +95,8 @@ object Graph {
   def bfsHops(edges: DataFrame, seeds: DataFrame, maxDepth: Int,
       reliable: Boolean = false): DataFrame = {
     require(maxDepth >= 0, "maxDepth must be non-negative")
-    val sc = edges.sparkSession.sparkContext
-    require(!reliable || sc.getCheckpointDir.isDefined,
-      "reliable=true needs sc.setCheckpointDir(...) before the loop")
     def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
+      graft.ml.Materialize.cut(df, reliable)
     // every frontier generation is RETAINED by design — the union of
     // frontiers is both the visited set and the result — so no
     // per-round reclamation applies here (unlike shortestPathsBounded);
@@ -187,11 +184,9 @@ object Graph {
     // freed once its successor is materialized, so a deep-rounds
     // caller holds THREE O(|V|)-or-|E| snapshots at any moment
     // (edges, current dist, current frontier) instead of one per
-    // round. One checkpointer per iterate — cuts are sequential on
-    // this driver thread, so each snapshot-diff claims only its own
-    // generation. The edge list gets its own so it can be freed when
-    // the loop ends (the returned dist is materialized and no longer
-    // references it).
+    // round. One checkpointer per iterate; the edge list gets its own
+    // so it can be freed when the loop ends (the returned dist is
+    // materialized and no longer references it).
     val edgeCk = new graft.ml.GenCheckpointer(spark, reliable)
     val distCk = new graft.ml.GenCheckpointer(spark, reliable)
     val frontCk = new graft.ml.GenCheckpointer(spark, reliable)
@@ -268,8 +263,8 @@ object Graph {
     // for a co-occurrence input each re-derivation re-runs the bag
     // self-join + distinct; materialize once (the pageRank/bfsHops
     // edge-snapshot discipline)
-    val edges = edgesIn.localCheckpoint()
-    val deg = degrees(edges).localCheckpoint()
+    val edges = graft.ml.Materialize.cut(edgesIn)
+    val deg = graft.ml.Materialize.cut(degrees(edges))
     val keyed = deg.select(col("node"),
       (col("deg") * lit(4294967296L) + col("node")).as("okey"))
     val e = edges
@@ -374,7 +369,7 @@ object Graph {
     val p3 = math.pow(keepNum.toDouble / keepDen, 3)
     // same materialize-once rule as triangleStats: the full edge list
     // is read by both the sample filter and the n_edges_full count
-    val edges = edgesIn.localCheckpoint()
+    val edges = graft.ml.Materialize.cut(edgesIn)
     val kept = edges.filter(
       pmod(graft.functions.Hash60(
           concat_ws("_", lit(seed), col("p1"), col("p2"))
@@ -424,18 +419,14 @@ object Graph {
     */
   def pageRank(edges: DataFrame, iters: Int = 3,
       damping: Double = 0.85, reliable: Boolean = false): DataFrame = {
-    def cut(df: DataFrame): DataFrame =
-      if (reliable) df.checkpoint() else df.localCheckpoint()
     // the rank iterate goes through a generation-scoped checkpointer
     // (the shortestPathsBounded discipline): each round's cut both
     // fixes the plan depth at one round (the previous lazy form
     // re-derived all earlier rounds into one ever-deeper plan) and
     // frees the superseded rank snapshot, so a deep-iters caller
     // holds one O(|V|) rank generation, not iters of them. deg stays
-    // on the plain cut: the RETURNED plan still reads it (n derives
-    // from deg at the end), so it must outlive the loop. The
-    // checkpoint-dir requirement moved into GenCheckpointer's
-    // constructor — still checked up front, not discovered mid-loop.
+    // on a plain cut: the RETURNED plan still reads it (n derives
+    // from deg at the end), so it must outlive the loop.
     val prCk = new graft.ml.GenCheckpointer(edges.sparkSession, reliable)
     val edgeCk = new graft.ml.GenCheckpointer(edges.sparkSession, reliable)
     // pre-cut before the symmetrize union (the bfsHops note): the two
@@ -456,8 +447,9 @@ object Graph {
       .select(col("p1").as("src"), col("p2").as("dst"))
       .unionAll(e0.select(col("p2").as("src"), col("p1").as("dst"))),
       rows = 2L * e0.count(), keys = Seq(col("src")))
-    val deg = cut(directed.groupBy(col("src").as("node"))
-      .agg(count(lit(1)).as("deg")))
+    val deg = graft.ml.Materialize.cut(directed
+      .groupBy(col("src").as("node")).agg(count(lit(1)).as("deg")),
+      reliable)
     val n = deg.agg(count(lit(1)).cast("double").as("n"))
     var pr = deg.crossJoin(broadcast(n))
       .select(col("node"), col("deg"), (lit(1.0) / col("n")).as("pr"))

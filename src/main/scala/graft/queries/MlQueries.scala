@@ -3169,15 +3169,12 @@ object MlQueries {
     }
     // The six evidence surfaces are independent read-only serves, but
     // each one's CONSTRUCTION runs bounded driver actions (stats
-    // heads, probed-cell/bucket collects, hardened-read checkpoints)
-    // that executed strictly serially on the driver thread — measured
-    // ~100 small jobs per serve pass with most wall in the gaps, not
-    // the executors (JobStats r17). Building the surfaces on a small
-    // thread pool overlaps those construction jobs (guide §2.6
-    // "overlap independent jobs"); the surfaces share no mutable
-    // state (the fixture block above is already complete) and the
-    // final union's orderBy makes result order construction-
-    // independent.
+    // heads, probed-cell/bucket collects, hardened-read checkpoints) —
+    // measured ~100 small jobs per serve pass with most wall in the
+    // gaps, not the executors (JobStats r17) — so they are built
+    // overlapped; they share no mutable state (the fixture block above
+    // is already complete) and the final union's orderBy makes result
+    // order construction-independent.
     val alive = emb.filter(col("vec_id") =!= lit(d))
     val surfaceThunks: Seq[() => DataFrame] = Seq(
       () => graft.streaming.CorpusIngest.readCorpus(s, corpus)
@@ -3219,18 +3216,7 @@ object MlQueries {
           col("doc_id").cast("long").as("a"),
           col("n_spans").cast("long").as("b"),
           col("dup_tokens").cast("long").as("c"), col("frac_dup").as("v")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(
-      surfaceThunks.size)
-    val evs =
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        Await.result(
-          Future.sequence(surfaceThunks.map(t => Future(t()))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    evs.reduce(_.unionByName(_))
+    Materialize.overlap(surfaceThunks).reduce(_.unionByName(_))
       .orderBy(col("surface"), col("a"), col("b"), col("c"))
   }
 
@@ -4425,12 +4411,12 @@ object MlQueries {
     // widenIfStarved: the langId CASE scans every word of every doc,
     // but the documents file is byte-small — the gate ran in ONE task
     // (measured 0.8 s single-task checkpoint job); no-op at scale
-    val filtered = Materialize.widenIfStarved(Tables.documents(s, dir)
-        .select(col("doc_id"), col("text"), col("n_chars")))
-      .filter(col("n_chars") >= 200 &&
-        TextAnalysis.langId(col("text")) === "en")
-      .select(col("doc_id"), col("text"))
-      .localCheckpoint()
+    val filtered = Materialize.cut(
+      Materialize.widenIfStarved(Tables.documents(s, dir)
+          .select(col("doc_id"), col("text"), col("n_chars")))
+        .filter(col("n_chars") >= 200 &&
+          TextAnalysis.langId(col("text")) === "en")
+        .select(col("doc_id"), col("text")))
     val pairs = Dedup.minhashPairs(filtered, n = 3, k = 16, bands = 4,
       threshold = 0.5)
     val canonical = Dedup.clusters(filtered, pairs)
@@ -5766,10 +5752,10 @@ object MlQueries {
     val queries = docs.filter(col("doc_id") % 50 === 0)
       .select(col("doc_id").as("query_id"),
         slice(split(col("text"), " "), 1, 4).as("terms"))
-    // the two towers' CONSTRUCTION runs bounded driver actions (bucket
-    // and probed-cell collects, stats heads) that are independent —
-    // overlap them on a two-thread pool (the ns68 §2.6 discipline; the
-    // fixture blocks above are complete before either thunk runs)
+    // the two towers' CONSTRUCTION runs independent bounded driver
+    // actions (bucket and probed-cell collects, stats heads) — overlap
+    // them (the ns68 discipline; the fixture blocks above are complete
+    // before either thunk runs)
     val towerThunks: Seq[() => DataFrame] = Seq(
       // lexical tower: chunk hits collapsed to docs by best chunk rank
       () => {
@@ -5791,16 +5777,7 @@ object MlQueries {
           probes = 3)
         .select(col("i").as("query_id"), col("j").as("doc_id"),
           col("rk").as("rank")))
-    val pool = java.util.concurrent.Executors.newFixedThreadPool(2)
-    val towers =
-      try {
-        import scala.concurrent.{Await, ExecutionContext, Future}
-        implicit val ec: ExecutionContext =
-          ExecutionContext.fromExecutorService(pool)
-        Await.result(Future.sequence(towerThunks.map(t => Future(t()))),
-          scala.concurrent.duration.Duration.Inf)
-      } finally pool.shutdown()
-    val (lex, sem) = (towers(0), towers(1))
+    val Seq(lex, sem) = Materialize.overlap(towerThunks)
     val fused = Retrieval.rrfFuse(Seq(lex, sem), k = 10)
     val wMax = org.apache.spark.sql.expressions.Window
       .partitionBy(col("query_id"))

@@ -265,16 +265,17 @@ object Versioning {
       ledgerTag: String = ""): Long = {
     require(targets.paths.nonEmpty,
       "forget: no target tables named — nothing would be erased")
-    val ids = itemIds.select(
+    graft.ml.Materialize.withCut(itemIds.select(
         when(col(key).isNotNull, col(key))
           .otherwise(raise_error(
             lit("forget: null key in erase batch"))).as(key))
-      .distinct().localCheckpoint()
-    val removed = targets.paths.map(p =>
-      forgetFrom(spark, ids, p, key, breakStaleLock)).sum
-    ledgerPath.foreach(lp =>
-      appendForgetLedger(spark, ids, targets, key, lp, ledgerTag))
-    removed
+      .distinct()) { ids =>
+      val removed = targets.paths.map(p =>
+        forgetFrom(spark, ids, p, key, breakStaleLock)).sum
+      ledgerPath.foreach(lp =>
+        appendForgetLedger(spark, ids, targets, key, lp, ledgerTag))
+      removed
+    }
   }
 
   /** The erasure-cascade compliance row (the

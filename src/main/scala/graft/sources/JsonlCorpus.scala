@@ -4,6 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.{StringType, StructType}
 
+import graft.ml.Materialize
+
 /** Line-delimited JSON ingestion with a malformed-line quarantine —
   * the file-format half of the dead-letter discipline the engine
   * already applies to field-level payloads (q53's rejects frame): a
@@ -239,11 +241,12 @@ object JsonlCorpus {
       fileRejectsPath: String, validate: String => Option[String])
       : Seq[String] = {
     import spark.implicits._
-    val probe = probeFilesWith(spark, dir, validate).localCheckpoint()
-    val bad = probe.filter(!col("ok"))
-    if (!bad.isEmpty) appendFileRejects(spark, bad, fileRejectsPath)
-    probe.filter(col("ok")).select("file").as[String].collect()
-      .toIndexedSeq
+    Materialize.withCut(probeFilesWith(spark, dir, validate)) { probe =>
+      val bad = probe.filter(!col("ok"))
+      if (!bad.isEmpty) appendFileRejects(spark, bad, fileRejectsPath)
+      probe.filter(col("ok")).select("file").as[String].collect()
+        .toIndexedSeq
+    }
   }
 
   /** [[readQuarantined]] with the file-level dead-letter in front:
@@ -318,8 +321,6 @@ object JsonlCorpus {
       landingDir: String, feedDir: String, fileRejectsPath: String,
       validate: String => Option[String]): (Long, Long) = {
     import spark.implicits._
-    val probe = probeFilesWith(spark, landingDir, validate)
-      .localCheckpoint()
     val fs = new org.apache.hadoop.fs.Path(landingDir)
       .getFileSystem(spark.sparkContext.hadoopConfiguration)
     val feed = new org.apache.hadoop.fs.Path(feedDir)
@@ -337,17 +338,20 @@ object JsonlCorpus {
       val target = new org.apache.hadoop.fs.Path(into, p.getName)
       !fs.exists(target) && fs.rename(p, target)
     }
-    val bad = probe.filter(!col("ok"))
-    val movedBad =
-      if (bad.isEmpty) Array.empty[(String, Boolean)]
-      else {
-        appendFileRejects(spark, bad, fileRejectsPath)
-        fs.mkdirs(quarantineDir)
-        bad.select("file").as[String].collect()
-          .map(f => f -> move(f, quarantineDir))
-      }
-    val movedGood = probe.filter(col("ok")).select("file").as[String]
-      .collect().map(f => f -> move(f, feed))
+    val (movedBad, movedGood) = Materialize.withCut(
+        probeFilesWith(spark, landingDir, validate)) { probe =>
+      val bad = probe.filter(!col("ok"))
+      val movedBad =
+        if (bad.isEmpty) Array.empty[(String, Boolean)]
+        else {
+          appendFileRejects(spark, bad, fileRejectsPath)
+          fs.mkdirs(quarantineDir)
+          bad.select("file").as[String].collect()
+            .map(f => f -> move(f, quarantineDir))
+        }
+      (movedBad, probe.filter(col("ok")).select("file").as[String]
+        .collect().map(f => f -> move(f, feed)))
+    }
     val moveFailed = (movedBad ++ movedGood).collect {
       case (f, false) => f
     }

@@ -210,10 +210,10 @@ object CdcPipeline {
   /** Write a [[mergeBatchPruned]] result back: dynamic partition
     * overwrite rewrites ONLY the bucket directories present in the
     * merged slice; untouched buckets' files are never listed, read, or
-    * replaced. localCheckpoint first — the merged frame's lineage
-    * reads the same path being overwritten, and a lazy plan would
-    * otherwise re-read mid-write (the foreachBatch read-after-append
-    * race, same cure as StreamingNearDup).
+    * replaced. Cut first, released after the write — the merged
+    * frame's lineage reads the same path being overwritten, and a lazy
+    * plan would otherwise re-read mid-write (the foreachBatch
+    * read-after-append race, same cure as StreamingNearDup).
     */
   def writeMergedBuckets(merged: DataFrame, historyPath: String,
       nBuckets: Int): Unit = {
@@ -248,11 +248,11 @@ object CdcPipeline {
     // restore, and a writer that plans under the restored STATIC mode
     // deletes every untouched bucket of its history table — the
     // writer option binds the mode to this write alone
-    merged.localCheckpoint()
+    graft.ml.Materialize.withCut(merged)(_
       .write.mode("overwrite")
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy("key_bucket")
-      .parquet(historyPath)
+      .parquet(historyPath))
   }
 
   /** T8 extension: tumbling-window event counts with a watermark. */

@@ -119,33 +119,34 @@ object CorpusIngest {
     val store = graft.ml.ServedStore.CorpusTable
     val snapshot = store.snapshot(fs, corpusPath)
     if (snapshot.isEmpty) return 0L
-    val dead = store.idsIn(spark, snapshot).localCheckpoint()
-    val committed = BatchCommit.committed(fs, root).map(_.toString)
-    val raw =
-      if (committed.isEmpty) None
-      else Some(spark.read.option("basePath", corpusPath)
-        .parquet(committed: _*))
-    // settled-only: pending tombstones (no corpus row yet) re-append
-    // BEFORE the commit, in a fresh file outside the manifest
-    store.reappendPending(dead, raw, corpusPath, pin = true)
-    // bounded driver action: the dirty-partition id list (takedowns
-    // touch the partitions their docs landed in, not the whole table)
-    val dirty: Seq[Long] = raw match {
-      case None => Seq.empty
-      case Some(r) => r.select(col("doc_id"),
-          col("ingest_batch").cast("long"))
-        .join(dead, Seq("doc_id"))
-        .select(col("ingest_batch")).distinct()
-        .collect().toSeq.map(_.getLong(0))
+    graft.ml.Materialize.withCut(store.idsIn(spark, snapshot)) { dead =>
+      val committed = BatchCommit.committed(fs, root).map(_.toString)
+      val raw =
+        if (committed.isEmpty) None
+        else Some(spark.read.option("basePath", corpusPath)
+          .parquet(committed: _*))
+      // settled-only: pending tombstones (no corpus row yet) re-append
+      // BEFORE the commit, in a fresh file outside the manifest
+      store.reappendPending(dead, raw, corpusPath, pin = true)
+      // bounded driver action: the dirty-partition id list
+      // (takedowns touch their docs' partitions, not the whole table)
+      val dirty: Seq[Long] = raw match {
+        case None => Seq.empty
+        case Some(r) => r.select(col("doc_id"),
+            col("ingest_batch").cast("long"))
+          .join(dead, Seq("doc_id"))
+          .select(col("ingest_batch")).distinct()
+          .collect().toSeq.map(_.getLong(0))
+      }
+      if (dirty.nonEmpty)
+        raw.get.filter(col("ingest_batch").isin(dirty: _*))
+          .join(dead, Seq("doc_id"), "left_anti")
+          .write.mode("overwrite").partitionBy("ingest_batch")
+          .parquet(CorpusStage.at(root).toString)
+      CorpusStage.commitParts(fs, root, dirty.sorted.map(_.toString),
+        snapshot)
+      dirty.length.toLong
     }
-    if (dirty.nonEmpty)
-      raw.get.filter(col("ingest_batch").isin(dirty: _*))
-        .join(dead, Seq("doc_id"), "left_anti")
-        .write.mode("overwrite").partitionBy("ingest_batch")
-        .parquet(CorpusStage.at(root).toString)
-    CorpusStage.commitParts(fs, root, dirty.sorted.map(_.toString),
-      snapshot)
-    dirty.length.toLong
   }
 
   /** Read the corpus table as a consumer must: COMMITTED partitions

@@ -51,20 +51,21 @@ object ErasureIngest {
   def enqueueBatch(batch: DataFrame, batchId: Long, queuePath: String,
       key: String): Unit = {
     val spark = batch.sparkSession
-    val ids = batch.select(
+    graft.ml.Materialize.withCut(batch.select(
         when(col(key).isNotNull, col(key)).otherwise(raise_error(
           lit("enqueueBatch: null key in erase request batch")))
           .as(key))
-      .distinct().localCheckpoint()
-    BatchCommit.committedWrite(spark, queuePath, batchId,
-      batchSig(ids, key),
-      "point the stream at a fresh queuePath, or re-key the existing " +
-        "partitions offline", lockRoot = queuePath) { part =>
-      // overwrite, the sibling-ingest discipline: a crashed write
-      // leaves the partition dir (no _SUCCESS) and the checkpointed
-      // replay must be able to write over the debris, not die on
-      // ErrorIfExists forever
-      ids.write.mode("overwrite").parquet(part)
+      .distinct()) { ids =>
+      BatchCommit.committedWrite(spark, queuePath, batchId,
+        batchSig(ids, key),
+        "point the stream at a fresh queuePath, or re-key the " +
+          "existing partitions offline", lockRoot = queuePath) { part =>
+        // overwrite, the sibling-ingest discipline: a crashed write
+        // leaves the partition dir (no _SUCCESS) and the checkpointed
+        // replay must be able to write over the debris, not die on
+        // ErrorIfExists forever
+        ids.write.mode("overwrite").parquet(part)
+      }
     }
   }
 
@@ -122,35 +123,38 @@ object ErasureIngest {
     val drainedPath = new org.apache.hadoop.fs.Path(root, DrainedDir)
     val haveMarks = fs.exists(drainedPath) &&
       CdcPipeline.hasParquetData(fs, drainedPath)
-    val pending = (if (haveMarks)
+    graft.ml.Materialize.withCut(if (haveMarks)
         queued.join(spark.read.parquet(drainedPath.toString)
             .select(col("ingest_batch"), col(key)),
           Seq("ingest_batch", key), "left_anti")
-      else queued).localCheckpoint()
-    val nPending = pending.count()
-    if (nPending == 0L) return (0L, 0L)
-    // the ledger tag is the pending REQUEST batches: a crash replay
-    // recomputes the same pending set → same tag → the cascade row
-    // absorbs; a later re-request of the same keys arrives in a new
-    // batch → new tag → a distinct audit row proves it was honored
-    val reqTag =
-      if (ledgerPath.isEmpty) ""
-      else pending.select(col("ingest_batch").cast("long"))
-        .distinct().collect().map(_.getLong(0)).sorted.mkString(",")
-    val removed = graft.scd.Versioning.forget(spark,
-      pending.select(col(key)), targets, key, breakStaleLock,
-      ledgerPath, ledgerTag = reqTag)
-    // drained marks LAST (after every table's swap landed),
-    // PARTITIONED by the request batch so [[compactQueue]] reclaims
-    // a batch's marks by whole-directory deletion (atomic per batch
-    // — a rewrite of a flat marks table could lose marks mid-crash,
-    // and a lost mark re-erases a key nobody re-requested). Pending
-    // is anti-joined against the marks by construction, so a plain
-    // append cannot duplicate; keyed by request so replays absorb
-    // and later re-requests stay pending.
-    pending.write.mode("append").partitionBy("ingest_batch")
-      .parquet(drainedPath.toString)
-    (nPending, removed)
+      else queued) { pending =>
+      val nPending = pending.count()
+      if (nPending == 0L) (0L, 0L)
+      else {
+        // the ledger tag is the pending REQUEST batches: a replay
+        // recomputes the same pending set → same tag → the cascade row
+        // absorbs; a later re-request arrives in a new batch → new tag
+        // → a distinct audit row proves it was honored
+        val reqTag =
+          if (ledgerPath.isEmpty) ""
+          else pending.select(col("ingest_batch").cast("long"))
+            .distinct().collect().map(_.getLong(0)).sorted.mkString(",")
+        val removed = graft.scd.Versioning.forget(spark,
+          pending.select(col(key)), targets, key, breakStaleLock,
+          ledgerPath, ledgerTag = reqTag)
+        // drained marks LAST (after every table's swap landed),
+        // PARTITIONED by the request batch so [[compactQueue]] reclaims
+        // a batch's marks by whole-directory deletion (atomic per batch
+        // — a rewrite of a flat marks table could lose marks mid-crash,
+        // and a lost mark re-erases a key nobody re-requested). Pending
+        // is anti-joined against the marks by construction, so a plain
+        // append cannot duplicate; keyed by request so replays absorb
+        // and later re-requests stay pending.
+        pending.write.mode("append").partitionBy("ingest_batch")
+          .parquet(drainedPath.toString)
+        (nPending, removed)
+      }
+    }
   }
 
   /** The queue's maintenance debt: request batches fully applied but

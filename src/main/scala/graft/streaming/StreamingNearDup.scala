@@ -4,7 +4,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 import org.apache.spark.sql.{DataFrame, SparkSession}
 
-import graft.ml.Dedup
+import graft.ml.{Dedup, Materialize}
 
 /** Streaming near-duplicate suppression — dedup for the ingest
   * firehose: every micro-batch is SimHashed, deduplicated within
@@ -31,29 +31,30 @@ object StreamingNearDup {
   /** Pure per-batch core (testable without a streaming runtime):
     * returns (novel batch rows, their signatures). A doc is dropped if
     * it near-dups a smaller-doc_id batch member (greedy) or anything
-    * in the store. The signature frame is localCheckpoint'ed: computed
-    * once, reused three ways, and — critically — severed from the
-    * store-read lineage so the caller can append to the store without
-    * the plan re-reading it.
+    * in the store. The signature frame is cut once, reused three
+    * ways, and released; the novel signatures are cut too — severed
+    * from the store-read lineage so the caller can append to the store
+    * without the plan re-reading it — and the caller releases that cut.
     */
   def filterNovel(batch: DataFrame, store: DataFrame, maxHamming: Int)
       : (DataFrame, DataFrame) = {
     val nb = maxHamming + 1
-    val sigs = Dedup.simhash(batch).localCheckpoint()
-    // within-batch: drop the larger id of every near-dup pair
-    val withinDropped = Dedup.simhashPairsFromSigs(sigs, maxHamming)
-      .select(col("j").as("doc_id")).distinct()
-    val survivors = sigs.join(withinDropped, Seq("doc_id"), "left_anti")
-    // against the store: banded candidate join + hamming verify
-    val seen = Dedup.simhashBands(survivors, nb)
-      .join(Dedup.simhashBands(store, nb)
-        .select(col("doc_id").as("sid"), col("simhash").as("ssig"),
-          col("band"), col("band_bits")),
-        Seq("band", "band_bits"))
-      .filter(bit_count(expr("simhash ^ ssig")) <= maxHamming)
-      .select(col("doc_id")).distinct()
-    val novelSigs = survivors.join(seen, Seq("doc_id"), "left_anti")
-      .localCheckpoint()
+    val novelSigs = Materialize.withCut(Dedup.simhash(batch)) { sigs =>
+      // within-batch: drop the larger id of every near-dup pair
+      val withinDropped = Dedup.simhashPairsFromSigs(sigs, maxHamming)
+        .select(col("j").as("doc_id")).distinct()
+      val survivors =
+        sigs.join(withinDropped, Seq("doc_id"), "left_anti")
+      // against the store: banded candidate join + hamming verify
+      val seen = Dedup.simhashBands(survivors, nb)
+        .join(Dedup.simhashBands(store, nb)
+          .select(col("doc_id").as("sid"), col("simhash").as("ssig"),
+            col("band"), col("band_bits")),
+          Seq("band", "band_bits"))
+        .filter(bit_count(expr("simhash ^ ssig")) <= maxHamming)
+        .select(col("doc_id")).distinct()
+      Materialize.cut(survivors.join(seen, Seq("doc_id"), "left_anti"))
+    }
     (batch.join(novelSigs, Seq("doc_id"), "left_semi"), novelSigs)
   }
 
@@ -221,12 +222,14 @@ object StreamingNearDup {
     val store = graft.ml.ServedStore.NearDupStore
     val snapshot = store.snapshot(fs, storePath)
     if (snapshot.isEmpty) return 0L
-    val dead = store.idsIn(spark, snapshot).localCheckpoint()
-    val nDead = dead.count()
-    // settled/pending split against the PRE-apply raw rows (the mask
-    // hides exactly the rows this question is about)
-    store.reappendPending(dead, Some(rawStore(spark, storePath)),
-      storePath, pin = true)
+    val nDead = Materialize.withCut(store.idsIn(spark, snapshot)) { dead =>
+      val n = dead.count()
+      // settled/pending split against the PRE-apply raw rows (the mask
+      // hides exactly the rows this question is about)
+      store.reappendPending(dead, Some(rawStore(spark, storePath)),
+        storePath, pin = true)
+      n
+    }
     // survivors (fully masked — a tombstone appended after the
     // snapshot masks rows out of the stage AND keeps its file) stage
     // durably; the uuid marker is the commit point
@@ -272,12 +275,12 @@ object StreamingNearDup {
     val alreadyAppended = !store.filter(own).isEmpty
     val (novel0, novelSigs) = filterNovel(batch,
       store.filter(!own).select("doc_id", "simhash"), maxHamming)
-    val novel = novel0.localCheckpoint()
-    onBatch(novel, batchId, mySig)
-    if (!alreadyAppended)
-      novelSigs.withColumn("batch_id", lit(batchId))
-        .withColumn("batch_sig", lit(mySig))
-        .write.mode("append").parquet(storePath)
-    ()
+    try Materialize.withCut(novel0) { novel =>
+      onBatch(novel, batchId, mySig)
+      if (!alreadyAppended)
+        novelSigs.withColumn("batch_id", lit(batchId))
+          .withColumn("batch_sig", lit(mySig))
+          .write.mode("append").parquet(storePath)
+    } finally Materialize.release(novelSigs)
   }
 }

@@ -9,14 +9,11 @@ import org.apache.spark.sql.execution.LogicalRDD
   * `df.checkpoint()` / `df.localCheckpoint()` persist the internal row
   * RDD and return a new Dataset whose logical plan is a single
   * [[LogicalRDD]] leaf wrapping it. Owning that RDD reference directly
-  * is what lets [[graft.ml.GenCheckpointer]] reclaim EXACTLY the
-  * generation it created — the previous snapshot-diff over
-  * `sc.getPersistentRDDs` claimed whatever appeared concurrently, so
-  * two driver threads checkpointing at once could free each other's
-  * live blocks (a real crash once serve construction overlapped the
-  * recall gates). [[LogicalRDD]] is `private[sql]`, hence this bridge
-  * in the `org.apache.spark.sql` namespace (the [[ColumnBridge]]
-  * pattern).
+  * is what lets [[graft.ml.Materialize.release]], the one release
+  * routine for every cut, free EXACTLY the cut it is given, never a
+  * concurrent thread's. [[LogicalRDD]] is `private[sql]`, hence this
+  * bridge in the `org.apache.spark.sql` namespace (the
+  * [[ColumnBridge]] pattern).
   */
 object RddBridge {
   def checkpointedRdd(df: DataFrame): Option[RDD[_]] =

@@ -10,9 +10,10 @@ import org.scalatest.funsuite.AnyFunSuite
   * stage format is written once, in [[StagedRewrite]], the writer lock
   * is acquired once, in `Maintenance.withWriterLock`, and the batch
   * ledger's format (partition name, sig and fold markers, content
-  * fingerprint) is known once, in `graft.streaming.BatchCommit`. A
-  * copied stage sequence, lock acquisition or ledger literal elsewhere
-  * fails here by name.
+  * fingerprint) is known once, in `graft.streaming.BatchCommit`.
+  * Lineage cuts and driver-side thread pools live once, in
+  * `graft.ml.Materialize`. A copied stage sequence, lock acquisition,
+  * ledger literal, cut or pool elsewhere fails here by name.
   */
 class StagedRewriteGuardSpec extends AnyFunSuite {
 
@@ -151,5 +152,24 @@ class StagedRewriteGuardSpec extends AnyFunSuite {
     val ownerScan = scanned.find(_._1 == owner).get._2
     assert(LedgerLiterals.forall(holds(ownerScan, _)),
       s"BatchCommit's literals: ${ownerScan._2}")
+  }
+
+  test("lineage cuts and driver-side pools are made once: no " +
+      "localCheckpoint(, .checkpoint(, Executors.new or Duration.Inf " +
+      "outside Materialize") {
+    val owner = Paths.get("src/main/scala/graft/ml/Materialize.scala")
+    val forbidden = Seq("localCheckpoint(", ".checkpoint(",
+      "Executors.new", "Duration.Inf")
+    val scanned = sources.map { case (p, src) => (p, scan(src)._1) }
+    assert(scanned.exists(_._1 == owner))
+    val offenders = scanned.filter(_._1 != owner).flatMap {
+      case (p, code) =>
+        forbidden.filter(code.contains(_)).map(f => s"$p: '$f'")
+    }
+    assert(offenders.isEmpty, offenders.mkString("\n"))
+    // the owner still cuts: the guard must not go blind
+    val ownerCode = scanned.find(_._1 == owner).get._2
+    assert(ownerCode.contains("localCheckpoint(") &&
+      ownerCode.contains(".checkpoint("))
   }
 }
